@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.BusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicLong
@@ -51,12 +52,11 @@ object Metrics {
   def observed(obs: org.apache.spark.sql.Observation): Map[String, Any] =
     obs.get
 
-  /** Run `action` counting the Spark JOBS launched inside (settle-
-    * polled like [[withMetrics]]) — the scheduling-overhead audit for
-    * driver-side evaluation loops: a grid that fires an action per
-    * cell reads as |cells| jobs here instead of one, which at a
-    * 1000-executor cluster is |cells| round trips of scheduler
-    * latency on an otherwise sample-sized computation. */
+  /** Run `action` counting the Spark JOBS launched inside — the
+    * scheduling-overhead audit for driver-side evaluation loops: a grid
+    * that fires an action per cell reads as |cells| jobs here instead
+    * of one, which at a 1000-executor cluster is |cells| round trips of
+    * scheduler latency on an otherwise sample-sized computation. */
   def withJobCount[T](spark: SparkSession)(action: => T): (T, Int) = {
     val n = new java.util.concurrent.atomic.AtomicInteger
     val l = new SparkListener {
@@ -67,38 +67,28 @@ object Metrics {
     spark.sparkContext.addSparkListener(l)
     try {
       val out = action
-      var prev = -1
-      var cur = n.get
-      val deadline = System.nanoTime() + 5000000000L
-      while (prev != cur && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        prev = cur
-        cur = n.get
-      }
+      BusDrain.drain(spark.sparkContext)
       (out, n.get)
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
   /** Run `action` with a listener attached; returns (result, aggregated
-    * task metrics for everything executed inside). */
+    * task metrics for everything executed inside). `durationMs` is the
+    * action's own wall time; the listener-bus drain that follows it is
+    * not counted. */
   def withMetrics[T](spark: SparkSession)(action: => T): (T, RunMetrics) = {
     val cap = new Capture
     spark.sparkContext.addSparkListener(cap)
-    val t0 = System.nanoTime()
     try {
+      val t0 = System.nanoTime()
       val out = action
-      // listener delivery is asynchronous: wait for the totals to settle
-      var prev = -1L
-      var cur = cap.bytesRead.get + cap.shuffleBytes.get + cap.recordsRead.get
-      val deadline = System.nanoTime() + 5000000000L
-      while (prev != cur && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        prev = cur
-        cur = cap.bytesRead.get + cap.shuffleBytes.get + cap.recordsRead.get
-      }
+      val durationMs = (System.nanoTime() - t0) / 1000000L
+      // listener delivery is asynchronous: every task-end event of the
+      // action is posted before it returns, so draining the bus settles
+      // the totals
+      BusDrain.drain(spark.sparkContext)
       (out, RunMetrics(cap.bytesRead.get, cap.recordsRead.get,
-        cap.shuffleBytes.get, cap.shuffleRecords.get,
-        (System.nanoTime() - t0) / 1000000L))
+        cap.shuffleBytes.get, cap.shuffleRecords.get, durationMs))
     } finally spark.sparkContext.removeSparkListener(cap)
   }
 }

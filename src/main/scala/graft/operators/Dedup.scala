@@ -541,33 +541,6 @@ object Dedup {
   private def normToks: org.apache.spark.sql.Column =
     split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
 
-  /** EXACT Jaccard set-similarity self-join WITHOUT LSH, via prefix
-    * filtering (the SSJoin/PPJoin family — Chaudhuri et al. ICDE'06,
-    * Xiao et al. WWW'08): order every document's set of distinct
-    * `shingle`-token shingles by a global canonical order (ascending
-    * document frequency, rare shingles first), keep only each set's
-    * PREFIX of length |x| − ⌈τ·|x|⌉ + 1, and generate candidates from
-    * an equi-join on prefix shingles — any pair with J ≥ τ must share
-    * a prefix element, so recall is 1.0 BY CONSTRUCTION (not
-    * probabilistically, like MinHash banding); exact Jaccard on the
-    * candidates makes precision exact too. The result provably equals
-    * the O(n²) all-pairs join — which is what the DuckDB oracle runs,
-    * and what the parity spec checks against a naive Spark plan.
-    * Shingles (not raw tokens) are the set elements: on a
-    * small-vocabulary corpus single-token sets are near-identical
-    * across unrelated documents, while shingle sets only overlap on
-    * genuinely shared phrasing (same reason dupSpans works on grams).
-    *
-    * Scale shape: one shingle-level count builds the frequency order
-    * (output ~ distinct shingles → AQE broadcasts it back while it
-    * fits), one doc-keyed re-sort, then candidates come from an
-    * equi-join on prefix shingles — rare-first ordering makes prefix
-    * postings short, so candidate volume tracks genuinely-similar mass
-    * rather than n². The full sets join back doc-keyed for
-    * verification (they ride two hash joins, never the shingle
-    * explosion). The residual risk is a frequent shingle surviving
-    * into many prefixes (boilerplate) — exactly the skew AQE join
-    * splitting handles. */
   /** doc_id + distinct `shingle`-token shingle set, AS A PLAN. The
     * repartition BEFORE the shingle projection moves only raw text,
     * then spreads the string-heavy shingle construction across every
@@ -597,66 +570,23 @@ object Dedup {
       .select(col("doc_id"),
         array_distinct(tokenGrams(col("toks"), shingle)).as("st"))
 
-  /** Per-occurrence SUFFIX bound (PPJoin+ depth-1 median partition,
-    * Xiao et al. WWW'08 §4): both sides' sets live in ONE global
-    * canonical order, so for suffixes SA (the la elements after A's
-    * shared token) and SB, any cut element c bounds
-    * |SA∩SB| ≤ min(|SA<c|,|SB<c|) + min(|SA≥c|,|SB≥c|). Each prefix
-    * occurrence carries its suffix's MEDIAN element; cutting at the
-    * smaller median m (where the OTHER side's below-m count is ≤ its
-    * own below-median count) gives
-    * |SA∩SB| ≤ min(la_l, lb_l) + 1 + (ma ≤ mb ? la_r : lb_r) —
-    * valid for EVERY shared occurrence, so pruning stays lossless via
-    * the first-shared-token argument. Cost: one struct per occurrence
-    * row; no arrays ride the candidate join. */
-  private[graft] def suffixOverlapBound(la: Column, lb: Column): Column = {
-    val laL = floor((la - 1) / lit(2))
-    val lbL = floor((lb - 1) / lit(2))
-    val median = lit(1) + least(laL, lbL) +
-      when(col("mid_a") <= col("mid_b"), la - 1 - laL).otherwise(lb - 1 - lbL)
-    when(la > 0 && lb > 0, least(least(la, lb), median))
-      .otherwise(least(la, lb))
-  }
-
-  /** (doc_id, sz, pos, tok [, mid]): the df-ordered prefix occurrences
-    * of each set — `prefLen(sz)` picks the prefix length (Jaccard and
-    * containment differ only here). With `withMid` each occurrence also
-    * carries the median element of the suffix AFTER its position — the
-    * [[suffixOverlapBound]] descriptor. */
+  /** (doc_id, sz, pos, tok): the df-ordered prefix occurrences of each
+    * set as shingle strings — `prefLen(sz)` picks the prefix length.
+    * The containment index stores these string-keyed prefixes at build
+    * and on each append; the query-time joins use the tid form
+    * ([[encodedSets]]) instead. */
   private[graft] def orderedPrefixes(sets: DataFrame, dfreq: DataFrame,
-      prefLen: Column => Column, withMid: Boolean = false): DataFrame = {
-    val ordered = sets
+      prefLen: Column => Column): DataFrame =
+    sets
       .select(col("doc_id"), size(col("st")).as("sz"), explode(col("st")).as("tok"))
       .join(dfreq, Seq("tok"))
       .groupBy(col("doc_id"))
       .agg(max(col("sz")).as("sz"),
         array_sort(collect_list(struct(col("df"), col("tok")))).as("ordered"))
-    if (!withMid)
-      ordered
-        .select(col("doc_id"), col("sz"),
-          posexplode(slice(col("ordered"), lit(1), prefLen(col("sz")).cast("int"))))
-        .select(col("doc_id"), col("sz"), (col("pos") + 1).as("pos"),
-          col("col.tok").as("tok"))
-    else
-      // (pos, tok, suffix-median) packed into a per-doc array
-      // ROW-LOCALLY, then exploded: a generator whose output references
-      // the full `ordered` array would copy that array into every
-      // emitted row (measured 12× on the containment join at sf0.1);
-      // packing first keeps the emitted rows narrow. The suffix after
-      // 1-based pos i has length sz−i; its median sits at index
-      // i+1+⌊(sz−i−1)/2⌋.
-      ordered
-        .select(col("doc_id"), col("sz"), explode(
-          transform(sequence(lit(1), least(prefLen(col("sz")), col("sz")).cast("int")),
-            i => struct(
-              i.as("pos"),
-              element_at(col("ordered"), i).getField("tok").as("tok"),
-              when(col("sz") > i, element_at(col("ordered"),
-                (i + lit(1) + floor((col("sz") - i - 1) / lit(2))).cast("int")))
-                .as("mid")))).as("e"))
-        .select(col("doc_id"), col("sz"), col("e.pos").as("pos"),
-          col("e.tok").as("tok"), col("e.mid").as("mid"))
-  }
+      .select(col("doc_id"), col("sz"),
+        posexplode(slice(col("ordered"), lit(1), prefLen(col("sz")).cast("int"))))
+      .select(col("doc_id"), col("sz"), (col("pos") + 1).as("pos"),
+        col("col.tok").as("tok"))
 
   /** Spread a small candidate-pair relation to full parallelism before
     * a CPU-heavy verify projection. The pair rows are tiny (two longs),
@@ -703,17 +633,38 @@ object Dedup {
         sort_array(collect_list(col("tid"))).as("sti"))
   }
 
-  /** `suffixFilter` adds the [[suffixOverlapBound]] prune (PPJoin+
-    * depth-1). MEASURED OFF by default at sf0.1: the median bound
-    * prunes 0 of the 124,979 candidates the length+positional filters
-    * leave (the two-sided positional bound is already maximal on this
-    * corpus's prefix geometry), so the descriptor build and the
-    * per-occurrence struct comparison are pure cost here. The flag is
-    * the documented lever for corpora where candidate volume, not the
-    * occurrence scan, dominates. */
+  /** EXACT Jaccard set-similarity self-join WITHOUT LSH, via prefix
+    * filtering (the SSJoin/PPJoin family — Chaudhuri et al. ICDE'06,
+    * Xiao et al. WWW'08): order every document's set of distinct
+    * `shingle`-token shingles by a global canonical order (ascending
+    * document frequency, rare shingles first), keep only each set's
+    * PREFIX of length |x| − ⌈τ·|x|⌉ + 1, and generate candidates from
+    * an equi-join on prefix shingles — any pair with J ≥ τ must share
+    * a prefix element, so recall is 1.0 BY CONSTRUCTION (not
+    * probabilistically, like MinHash banding); exact Jaccard on the
+    * candidates makes precision exact too. The result provably equals
+    * the O(n²) all-pairs join — which is what the DuckDB oracle runs,
+    * and what the parity spec checks against a naive Spark plan.
+    * Shingles (not raw tokens) are the set elements: on a
+    * small-vocabulary corpus single-token sets are near-identical
+    * across unrelated documents, while shingle sets only overlap on
+    * genuinely shared phrasing (same reason dupSpans works on grams).
+    *
+    * Scale shape: one shingle-level count builds the frequency order
+    * (output ~ distinct shingles → AQE broadcasts it back while it
+    * fits), one doc-keyed re-sort, then candidates come from an
+    * equi-join on prefix shingles — rare-first ordering makes prefix
+    * postings short, so candidate volume tracks genuinely-similar mass
+    * rather than n². The full sets join back doc-keyed for
+    * verification (they ride two hash joins, never the shingle
+    * explosion). The residual risk is a frequent shingle surviving
+    * into many prefixes (boilerplate) — exactly the skew AQE join
+    * splitting handles. Candidate keys and verify arrays are the
+    * tid-encoded sets ([[encodedSets]]). The PPJoin+ suffix bound is
+    * not implemented: at sf0.1 it pruned 0 of the 124,979 candidates
+    * the length and positional prunes leave. */
   def jaccardPrefixJoin(spark: SparkSession, dir: String,
-      tau: Double = 0.5, shingle: Int = 3,
-      suffixFilter: Boolean = false): DataFrame = {
+      tau: Double = 0.5, shingle: Int = 3): DataFrame = {
     val setsPlan = tokenShingleSets(spark, dir, shingle)
     // the frequency/prefix pipeline reads the shingles twice → one
     // materialized copy for that side only
@@ -730,54 +681,30 @@ object Dedup {
     //    which must reach α = ⌈τ/(1+τ)·(|A|+|B|)⌉ (the overlap J ≥ τ
     //    implies); a qualifying pair always passes via its FIRST
     //    shared token, so occurrence-level pruning is lossless
-    //  - optional suffix filter: [[suffixOverlapBound]] tightens the
-    //    same bound with the carried suffix medians
     val prefLenOf: Column => Column =
       sz => sz - ceil(lit(tau) * sz - lit(PruneEps)) + 1
     val alphaNeeded =
       ceil(lit(tau / (1.0 + tau)) * (col("sz_a") + col("sz_b")) - lit(PruneEps))
     val la = col("sz_a") - col("pos_a")
     val lb = col("sz_b") - col("pos_b")
-    val (cands, encVerify) = if (!suffixFilter) {
-      // tid-ENCODED path (the default): one exactly-encoded frame
-      // ([[encodedSets]] — a bijection, so counts are unchanged) serves
-      // the prefix explode AND both verify sides; the candidate join
-      // and the verify arrays carry 8-byte tids instead of shingle
-      // strings (§2.3 shuffle fewer bytes, measured 2× on the verify)
-      val enc = encodedSets(sets, dfreq).localCheckpoint()
-      def side(s: String): DataFrame = enc
-        .select(col("doc_id").as(s"doc_$s"), col("sz").as(s"sz_$s"),
-          posexplode(slice(col("sti"), lit(1),
-            prefLenOf(col("sz")).cast("int"))))
-        .select(col(s"doc_$s"), col(s"sz_$s"),
-          (col("pos") + 1).as(s"pos_$s"), col("col").as("tid"))
-      val c = side("a").join(side("b"), Seq("tid"))
-        .filter(col("doc_a") < col("doc_b") &&
-          least(col("sz_a"), col("sz_b")).cast("double") >=
-            lit(tau) * greatest(col("sz_a"), col("sz_b")) - lit(PruneEps) &&
-          (lit(1) + least(la, lb)) >= alphaNeeded)
-        .select(col("doc_a"), col("doc_b")).distinct()
-      (c, enc.select(col("doc_id"), col("sti").as("st")))
-    } else {
-      // per-doc tokens re-ordered by (df asc, tok asc); prefix keeps
-      // the first |x| - ceil(tau*|x|) + 1 — the rarest tokens; the
-      // candidate join carries an 8-byte xxhash of the shingle (equal
-      // shingles keep equal hashes so recall is unchanged; collision
-      // extras die in the exact verify below)
-      val prefixes = orderedPrefixes(sets, dfreq, prefLenOf, withMid = true)
-        .localCheckpoint() // consumed by both sides of the candidate join
-      def side(s: String): DataFrame = prefixes.select(
-        col("doc_id").as(s"doc_$s"), col("sz").as(s"sz_$s"),
-        col("pos").as(s"pos_$s"), xxhash64(col("tok")).as("tok"),
-        col("mid").as(s"mid_$s"))
-      val c = side("a").join(side("b"), Seq("tok"))
-        .filter(col("doc_a") < col("doc_b") &&
-          least(col("sz_a"), col("sz_b")).cast("double") >=
-            lit(tau) * greatest(col("sz_a"), col("sz_b")) - lit(PruneEps) &&
-          (lit(1) + suffixOverlapBound(la, lb)) >= alphaNeeded)
-        .select(col("doc_a"), col("doc_b")).distinct()
-      (c, sets)
-    }
+    // one exactly-encoded frame ([[encodedSets]] — a bijection, so
+    // counts are unchanged) serves the prefix explode AND both verify
+    // sides; the candidate join and the verify arrays carry 8-byte tids
+    // instead of shingle strings (§2.3 shuffle fewer bytes, measured 2×
+    // on the verify)
+    val enc = encodedSets(sets, dfreq).localCheckpoint()
+    def side(s: String): DataFrame = enc
+      .select(col("doc_id").as(s"doc_$s"), col("sz").as(s"sz_$s"),
+        posexplode(slice(col("sti"), lit(1),
+          prefLenOf(col("sz")).cast("int"))))
+      .select(col(s"doc_$s"), col(s"sz_$s"),
+        (col("pos") + 1).as(s"pos_$s"), col("col").as("tid"))
+    val cands = side("a").join(side("b"), Seq("tid"))
+      .filter(col("doc_a") < col("doc_b") &&
+        least(col("sz_a"), col("sz_b")).cast("double") >=
+          lit(tau) * greatest(col("sz_a"), col("sz_b")) - lit(PruneEps) &&
+        (lit(1) + least(la, lb)) >= alphaNeeded)
+      .select(col("doc_a"), col("doc_b")).distinct()
     // the intersection is computed ONCE per candidate (a naive
     // `filter(j) … select(j)` re-evaluates array_intersect four times —
     // it appears twice inside j and the expression isn't CSE'd across
@@ -785,8 +712,8 @@ object Dedup {
     // identical arithmetic the oracle runs
     // verify reads the MATERIALIZED sets — see containmentJoinOn
     spreadPairs(cands)
-      .join(encVerify.select(col("doc_id").as("doc_a"), col("st").as("sa")), Seq("doc_a"))
-      .join(encVerify.select(col("doc_id").as("doc_b"), col("st").as("sb")), Seq("doc_b"))
+      .join(enc.select(col("doc_id").as("doc_a"), col("sti").as("sa")), Seq("doc_a"))
+      .join(enc.select(col("doc_id").as("doc_b"), col("sti").as("sb")), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         intersectSize(col("sa"), col("sb")).as("inter"),
         (size(col("sa")) + size(col("sb"))).as("szsum"))
@@ -826,9 +753,8 @@ object Dedup {
     * [[jaccardPrefixJoin]]. Boilerplate shingles surviving into many
     * prefixes are the AQE-skew-split case again. */
   def containmentJoin(spark: SparkSession, dir: String,
-      tau: Double = 0.6, shingle: Int = 3,
-      suffixFilter: Boolean = false): DataFrame =
-    containmentJoinOn(Tables.documents(spark, dir), tau, shingle, suffixFilter)
+      tau: Double = 0.6, shingle: Int = 3): DataFrame =
+    containmentJoinOn(Tables.documents(spark, dir), tau, shingle)
 
   /** Core of [[containmentJoin]] over any (doc_id, text) frame — the
     * query entry drives it with a deterministic md5-top-N audit panel
@@ -836,19 +762,11 @@ object Dedup {
     * checker-feasible at every SF; the full-corpus operator is this
     * same plan over the whole documents table.
     *
-    * `suffixFilter` switches the B side from the orderless posting
-    * explosion to the df-ordered occurrence relation (shared with the
-    * A side), buying the B-positional and suffix-median prunes —
-    * measured at sf0.1: candidates into the verify drop 570,038 →
-    * 462,434 (−19%), but the ordered-B build (df join + per-doc sort
-    * over every occurrence) costs more than the pruned fifth saves, so
-    * the flag defaults OFF at this SF. It is the documented lever for
-    * the candidate-bound regime (boilerplate-heavy corpora / higher
-    * SF, where pair volume grows faster than the linear occurrence
-    * scan). */
+    * Candidates come from the tid-encoded sets ([[encodedSets]]):
+    * A-side prefixes joined to B-side full postings, pruned by B length
+    * and A position. */
   def containmentJoinOn(docs: DataFrame,
-      tau: Double = 0.6, shingle: Int = 3,
-      suffixFilter: Boolean = false): DataFrame = {
+      tau: Double = 0.6, shingle: Int = 3): DataFrame = {
     val setsPlan = tokenShingleSetsOf(docs, shingle)
     // the frequency/prefix pipeline reads the shingles twice → one
     // materialized copy for that side only
@@ -858,69 +776,39 @@ object Dedup {
     val prefLen: Column => Column =
       sz => sz - ceil(lit(tau) * sz - lit(PruneEps)) + 1
     val needA = ceil(lit(tau) * col("sz_a") - lit(PruneEps))
-    // prunes, all lossless via the FIRST shared token (in canonical
+    // ONE exactly-encoded frame ([[encodedSets]] — a bijection, counts
+    // unchanged) serves the A-side prefix explode, the B-side postings
+    // AND both verify sides; the candidate join and the verify arrays
+    // carry 8-byte tids instead of shingle strings (§2.3, measured 2× on
+    // the verify join). The B side needs no ordering, so its postings
+    // are a plain explode of the same encoded array.
+    val enc = encodedSets(sets, dfreq).localCheckpoint()
+    val prefixes = enc
+      .select(col("doc_id").as("doc_a"), col("sz").as("sz_a"),
+        posexplode(slice(col("sti"), lit(1),
+          prefLen(col("sz")).cast("int"))))
+      .select(col("doc_a"), col("sz_a"),
+        (col("pos") + 1).as("pos_a"), col("col").as("tid"))
+    val postings = enc
+      .select(col("doc_id").as("doc_b"), col("sz").as("sz_b"),
+        explode(col("sti")).as("tid"))
+    // prunes, both lossless via the FIRST shared token (in canonical
     // order no overlap element precedes it on EITHER side — an earlier
     // shared element would itself be the first):
     //  - B length: |B| ≥ overlap ≥ ⌈τ·|A|⌉
     //  - A-positional: overlap ≤ 1 + (|A| − i)
-    //  - with suffixFilter also B-positional + suffix-median
-    //    ([[suffixOverlapBound]]) over the shared ordered relation
-    val enc = if (suffixFilter) null
-      else encodedSets(sets, dfreq).localCheckpoint()
-    val cands = (if (!suffixFilter) {
-      // tid-ENCODED path (the default): ONE exactly-encoded frame
-      // ([[encodedSets]] — a bijection, counts unchanged) serves the
-      // A-side prefix explode, the B-side postings AND both verify
-      // sides; the candidate join and the verify arrays carry 8-byte
-      // tids instead of shingle strings (§2.3, measured 2× on the
-      // verify join). The B side needs no ordering, so its postings
-      // are a plain explode of the same encoded array.
-      val prefixes = enc
-        .select(col("doc_id").as("doc_a"), col("sz").as("sz_a"),
-          posexplode(slice(col("sti"), lit(1),
-            prefLen(col("sz")).cast("int"))))
-        .select(col("doc_a"), col("sz_a"),
-          (col("pos") + 1).as("pos_a"), col("col").as("tid"))
-      val postings = enc
-        .select(col("doc_id").as("doc_b"), col("sz").as("sz_b"),
-          explode(col("sti")).as("tid"))
-      prefixes.join(postings, Seq("tid"))
-        .filter(col("doc_a") =!= col("doc_b") &&
-          col("sz_b") >= needA &&
-          (lit(1) + col("sz_a") - col("pos_a")) >= needA)
-    } else {
-      // ONE df-ordered occurrence relation serves BOTH sides: the A
-      // side filters down to its prefix, the B side keeps every
-      // occurrence — B cannot be prefix-pruned (containment is
-      // one-sided), but deriving it from the ordered aggregation gives
-      // it POSITIONS and suffix medians
-      val occs = orderedPrefixes(sets, dfreq, sz => sz, withMid = true)
-        .localCheckpoint()
-      val prefixes = occs
-        .filter(col("pos") <= prefLen(col("sz")))
-        .select(col("doc_id").as("doc_a"), col("sz").as("sz_a"),
-          col("pos").as("pos_a"), xxhash64(col("tok")).as("tok"),
-          col("mid").as("mid_a"))
-      val postings = occs
-        .select(col("doc_id").as("doc_b"), col("sz").as("sz_b"),
-          col("pos").as("pos_b"), xxhash64(col("tok")).as("tok"),
-          col("mid").as("mid_b"))
-      prefixes.join(postings, Seq("tok"))
-        .filter(col("doc_a") =!= col("doc_b") &&
-          col("sz_b") >= needA &&
-          (lit(1) + suffixOverlapBound(col("sz_a") - col("pos_a"),
-            col("sz_b") - col("pos_b"))) >= needA)
-    }).select(col("doc_a"), col("doc_b")).distinct()
-    // the verify reads the MATERIALIZED sets (not the raw plan): each
-    // side of the attach join would otherwise re-run tokenization +
-    // shingling over the whole corpus a third and fourth time. On the
-    // default path the arrays are the encoded tid sets — same sizes,
-    // same intersection counts (bijection).
-    val verifySets = if (suffixFilter) sets
-      else enc.select(col("doc_id"), col("sti").as("st"))
+    val cands = prefixes.join(postings, Seq("tid"))
+      .filter(col("doc_a") =!= col("doc_b") &&
+        col("sz_b") >= needA &&
+        (lit(1) + col("sz_a") - col("pos_a")) >= needA)
+      .select(col("doc_a"), col("doc_b")).distinct()
+    // the verify reads the MATERIALIZED encoded sets (not the raw plan):
+    // each side of the attach join would otherwise re-run tokenization +
+    // shingling over the whole corpus a third and fourth time; the tid
+    // arrays have the same sizes and intersection counts (bijection)
     spreadPairs(cands)
-      .join(verifySets.select(col("doc_id").as("doc_a"), col("st").as("sa")), Seq("doc_a"))
-      .join(verifySets.select(col("doc_id").as("doc_b"), col("st").as("sb")), Seq("doc_b"))
+      .join(enc.select(col("doc_id").as("doc_a"), col("sti").as("sa")), Seq("doc_a"))
+      .join(enc.select(col("doc_id").as("doc_b"), col("sti").as("sb")), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         (intersectSize(col("sa"), col("sb")).cast("double") /
           size(col("sa"))).as("c"))

@@ -357,31 +357,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("PPJoin+ suffix-filter path (suffixFilter=true) is lossless: " +
-      "equal results to the default plan on both joins, boundary taus") {
-    // the flagged plan carries suffix medians and, for containment, the
-    // ordered B side — candidates drop (−19% measured at sf0.1) but the
-    // RESULT must be bit-identical to the positional-only default
-    for ((dir, tauJ, tauC) <- Seq(
-      ("/root/testdata/sf0.001", 0.3, 0.35),
-      ("/root/testdata/sf0.01", 0.5, 0.6))) {
-      val jDefault = Dedup.jaccardPrefixJoin(spark, dir, tauJ)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val jSuffix = Dedup.jaccardPrefixJoin(spark, dir, tauJ, suffixFilter = true)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(jSuffix == jDefault,
-        s"jaccard suffix path diverged at $dir tau=$tauJ: " +
-          s"missing=${jDefault -- jSuffix} extra=${jSuffix -- jDefault}")
-      val cDefault = Dedup.containmentJoin(spark, dir, tauC)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val cSuffix = Dedup.containmentJoin(spark, dir, tauC, suffixFilter = true)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(cSuffix == cDefault,
-        s"containment suffix path diverged at $dir tau=$tauC: " +
-          s"missing=${cDefault -- cSuffix} extra=${cSuffix -- cDefault}")
-    }
-  }
-
   test("contamination: shares bounded, counts consistent, overlap detected") {
     val c = TextAnalysis.contamination(spark, sf)
     assert(c.count() > 0)

@@ -37,4 +37,29 @@ class MetricsSpec extends AnyFunSuite {
     }
     assert(m.shuffleBytesWritten == 0, s"plain scan must not shuffle: $m")
   }
+
+  test("withMetrics durationMs is the action's own wall time, not the " +
+      "listener settle that follows it") {
+    var innerMs = 0L
+    val (n, m) = Metrics.withMetrics(spark) {
+      val t0 = System.nanoTime()
+      val c = spark.sparkContext.parallelize(1 to 100, 4).count()
+      innerMs = (System.nanoTime() - t0) / 1000000L
+      c
+    }
+    assert(n == 100L)
+    assert(math.abs(m.durationMs - innerMs) <= 50,
+      s"durationMs ${m.durationMs} vs the action's own $innerMs ms")
+  }
+
+  test("withJobCount counts exactly the jobs launched inside the action") {
+    val sc = spark.sparkContext
+    val (n, one) = Metrics.withJobCount(spark)(sc.parallelize(1 to 100, 4).count())
+    assert(n == 100L)
+    assert(one == 1, s"one count() launched $one jobs")
+    val (_, two) = Metrics.withJobCount(spark) {
+      sc.parallelize(1 to 100, 4).count() + sc.parallelize(1 to 100, 4).count()
+    }
+    assert(two == 2, s"two count()s launched $two jobs")
+  }
 }
