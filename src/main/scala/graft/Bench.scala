@@ -37,11 +37,11 @@ object Bench {
     // explicitly; failed reps surface as an "err" count in the spread
     // and the query's median is the negative sentinel -1.0.
     def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): (Double, Boolean) = {
+        org.apache.spark.sql.DataFrame): (Double, Option[Throwable]) = {
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
-      ((System.nanoTime() - t0) / 1e9, ok)
+      val err = try { fn(spark, sfDir).count(); None }
+                catch { case e: Throwable => Some(e) }
+      ((System.nanoTime() - t0) / 1e9, err)
     }
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
@@ -75,15 +75,18 @@ object Bench {
         .getSystemLoadAverage
     val loadStart = loadAvg
     val stats = queries.map { case (name, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => }
+      val warmErr = try { fn(spark, sfDir).count(); None }
+                    catch { case e: Throwable => Some(e) }
       resetSessionState()
       val runs = (1 to reps).map { _ =>
         val r = timeOnce(fn)
         resetSessionState()
         r
       }
+      (warmErr ++ runs.flatMap(_._2)).headOption.foreach(e =>
+        System.err.println(s"[bench] $name failed: $e"))
       val times = runs.map(_._1)
-      val errs = runs.count(!_._2)
+      val errs = runs.count(_._2.isDefined)
       // any failed rep poisons the median: -1.0 is unambiguous in the
       // artifact where a small positive wall is not
       val med = if (errs > 0) -1.0 else median(times)

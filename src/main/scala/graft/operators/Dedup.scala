@@ -355,8 +355,13 @@ object Dedup {
     * new crawl against the corpus" costing O(new batch) and costing
     * O(corpus). */
   def buildMinhashIndex(spark: SparkSession, dir: String, name: String,
+      nBuckets: Int = 8): Unit =
+    buildMinhashIndexOf(spark, Tables.documents(spark, dir), name, nBuckets)
+
+  /** [[buildMinhashIndex]] over any (doc_id, text) frame. */
+  def buildMinhashIndexOf(spark: SparkSession, docs: DataFrame, name: String,
       nBuckets: Int = 8): Unit = {
-    val bands = banded(shingled(spark, dir))
+    val bands = banded(shingledOf(docs))
       .select(col("doc_id"), col("band_id"), col("band_sig"))
       .withColumn("band_key", xxhash64(col("band_id"), col("band_sig")))
       .withColumn("epoch", lit(0L))
@@ -367,8 +372,7 @@ object Dedup {
     // their verbatim twins caught at ingest — the digest relation is
     // the probe surface for that, bucketed like everything else
     graft.sources.FormatIO.writeBucketed(
-      Tables.documents(spark, dir)
-        .select(col("doc_id"), digestCol.as("digest"))
+      docs.select(col("doc_id"), digestCol.as("digest"))
         .withColumn("epoch", lit(0L)),
       s"${name}_digests", "digest", nBuckets)
     graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
@@ -555,10 +559,6 @@ object Dedup {
     * runtime). Callers materialize their own token-level consumers, so
     * the shingle build executes a bounded number of times, in
     * parallel. */
-  private def tokenShingleSets(spark: SparkSession, dir: String,
-      shingle: Int): DataFrame =
-    tokenShingleSetsOf(Tables.documents(spark, dir), shingle)
-
   private[graft] def tokenShingleSetsOf(docs: DataFrame, shingle: Int): DataFrame =
     docs
       .select(col("doc_id"), col("text"))
@@ -665,7 +665,7 @@ object Dedup {
     * the length and positional prunes leave. */
   def jaccardPrefixJoin(spark: SparkSession, dir: String,
       tau: Double = 0.5, shingle: Int = 3): DataFrame = {
-    val setsPlan = tokenShingleSets(spark, dir, shingle)
+    val setsPlan = tokenShingleSetsOf(Tables.documents(spark, dir), shingle)
     // the frequency/prefix pipeline reads the shingles twice → one
     // materialized copy for that side only
     val sets = setsPlan.localCheckpoint()
@@ -830,8 +830,15 @@ object Dedup {
     * short); and the shingle sets, bucketed by doc, for the verify
     * join's corpus side. */
   def buildContainmentIndex(spark: SparkSession, dir: String, name: String,
-      nBuckets: Int = 8, shingle: Int = 3, tau: Double = 0.6): Unit = {
-    val sets = tokenShingleSets(spark, dir, shingle).localCheckpoint()
+      nBuckets: Int = 8, shingle: Int = 3, tau: Double = 0.6): Unit =
+    buildContainmentIndexOf(spark, Tables.documents(spark, dir), name,
+      nBuckets, shingle, tau)
+
+  /** [[buildContainmentIndex]] over any (doc_id, text) frame. */
+  def buildContainmentIndexOf(spark: SparkSession, docs: DataFrame,
+      name: String, nBuckets: Int = 8, shingle: Int = 3,
+      tau: Double = 0.6): Unit = {
+    val sets = tokenShingleSetsOf(docs, shingle).localCheckpoint()
     val postings = sets.select(col("doc_id").as("doc_b"),
       size(col("st")).as("sz_b"), explode(col("st")).as("tok"))
       .withColumn("epoch", lit(0L))
@@ -1630,38 +1637,22 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** Linkage-audit staging cache — the τ=1 customer-name edit-join
-    * pair relation, staged ONCE per (SparkContext, corpus dir) and
-    * shared by the three consumers that audit the same graph
-    * ([[fsLinkage]], [[graft.operators.Graph.linkageModularity]],
-    * [[graft.operators.Graph.linkageAssortativity]]): candidate
-    * generation is the dominant cost of all three, so recomputing it
-    * per query paid 3× for one relation. Same amortization contract
-    * as `Graph.dcAdjCache` / `Pipeline.incStageCache`: UUID-fresh
-    * table names keyed by applicationId so a new context never
-    * collides with an orphaned warehouse dir; a corpus change under
-    * the same dir needs a context restart. */
-  private val editPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
-  /** The staged τ=1 (key_a, key_b, edit_distance) customer-name pair
-    * relation for `dir` — builds via [[editJoin]] on first use, then
-    * reads the persisted table. */
-  def stagedNameEditPairs(spark: SparkSession, dir: String): DataFrame = {
-    val t = editPairsCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir), _ => {
-        val name = "graft_edit_pairs_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        editJoin(
-          Tables.customer(spark, dir).select(col("c_custkey"), col("c_name")),
-          "c_custkey", "c_name", Nil, tau = 1)
-          .write.format("parquet")
-          .mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
-          .saveAsTable(name)
-        name
-      })
-    spark.table(t)
-  }
+  /** The τ=1 (key_a, key_b, edit_distance) customer-name pair relation
+    * of [[editJoin]], staged by [[graft.sources.Staged]]: its three
+    * consumers ([[fsLinkage]], `Graph.linkageModularity`,
+    * `Graph.linkageAssortativity`) are dominated by candidate
+    * generation, so recomputing it per query paid 3× for one relation. */
+  def stagedNameEditPairs(spark: SparkSession, dir: String): DataFrame =
+    spark.table(graft.sources.Staged(spark, "graft_edit_pairs", dir,
+        Seq("customer")) { name =>
+      editJoin(
+        Tables.customer(spark, dir).select(col("c_custkey"), col("c_name")),
+        "c_custkey", "c_name", Nil, tau = 1)
+        .write.format("parquet")
+        .mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
+        .saveAsTable(name)
+      name
+    })
 
   /** FELLEGI–SUNTER probabilistic record-linkage scoring (Fellegi &
     * Sunter 1969) over the lossless deletion-blocked candidate pairs —

@@ -297,29 +297,19 @@ object Graph {
     * labels of [[Dedup.dedupClusters]]. Rank rounded to 6 decimals to
     * pin partial-sum order noise.
     *
-    * The adjacency is staged ONCE per (SparkContext, corpus dir) as a
-    * persisted bucketed table and reused by later calls (build/iterate
-    * split — same amortization contract as the MinHash band index: a
-    * corpus change under the same dir needs an explicit restage, here
-    * by restarting the context). Table names are UUID-fresh per
-    * staging and the cache is keyed by applicationId: a NEW context
-    * (whose in-memory catalog forgot the old table while its warehouse
-    * dir survives on disk) never tries to re-create over the orphaned
-    * location. */
-  private val dcAdjCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
+    * The adjacency is a persisted bucketed table that
+    * [[graft.sources.Staged]] builds once per session and `documents`
+    * contents, and later calls reuse (build/iterate split — the MinHash
+    * band index contract). */
   def dupCentrality(spark: SparkSession, dir: String): DataFrame = {
-    val adjTable = dcAdjCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir), _ => {
-        val t = "graft_pr_adj_dc_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        // unordered pair core: stageAdjacency symmetrizes + distincts,
-        // so the query face's presentation sort is wasted here
-        stageAdjacency(Dedup.minhashPairsOf(
-          graft.sources.Tables.documents(spark, dir)), "doc_a", "doc_b", t)
-        t
-      })
+    val adjTable = graft.sources.Staged(spark, "graft_pr_adj_dc", dir,
+        Seq("documents")) { t =>
+      // unordered pair core: stageAdjacency symmetrizes + distincts,
+      // so the query face's presentation sort is wasted here
+      stageAdjacency(Dedup.minhashPairsOf(
+        graft.sources.Tables.documents(spark, dir)), "doc_a", "doc_b", t)
+      t
+    }
     pagerankOnAdjacency(spark, adjTable)
       .select(col("id").as("doc_id"), round(col("pr"), 6).as("centrality"))
       .orderBy(col("doc_id"))

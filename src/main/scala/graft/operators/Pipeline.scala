@@ -222,44 +222,39 @@ object Pipeline {
     }
   }
 
-  /** [[curateIncrement]] staging cache — same contract as the
-    * PageRank adjacency staging (`Graph.dcAdjCache`): the corpus
-    * indexes build once per (SparkContext, corpus dir) as the untimed
-    * half of the build/probe split; UUID-fresh table names keyed by
-    * applicationId so a new context never collides with an orphaned
-    * warehouse dir. */
-  private val incStageCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      (String, String, Long)]()
-
   /** The query-surface instance of [[curateIncrement]]: treat the
     * first nine-tenths of the id range as the ALREADY-CURATED corpus
-    * (indexes staged once per session) and curate the remaining tenth
-    * as the arriving wave — the regime an increment exists for (a
+    * (indexes staged by [[stagedIncrement]]) and curate the remaining
+    * tenth as the arriving wave — the regime an increment exists for (a
     * crawl wave is SMALL relative to the corpus; per-wave cost scales
     * with the wave, so benching a corpus-sized "wave" would measure
     * the wrong thing). Rows-only (component fixpoints have no clean
     * SQL form); the full-rebuild parity is spec-proved. */
   def corpusIncrement(spark: SparkSession, dir: String,
       minQuality: Double = 0.3): DataFrame = {
-    val (mh, cont, cut) = incStageCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir), _ => {
-        val docs = Tables.documents(spark, dir)
+    val ((mh, cont), batch) = stagedIncrement(spark, "graft_inc", dir) {
+      (prefix, corpus) =>
+        Dedup.buildMinhashIndexOf(spark, corpus, s"${prefix}_mh")
+        Dedup.buildContainmentIndexOf(spark, corpus, s"${prefix}_cont")
+        (s"${prefix}_mh", s"${prefix}_cont")
+    }
+    curateIncrement(spark, mh, cont, batch, minQuality)
+  }
+
+  /** The increment faces' split of `dir`'s documents: `build` indexes
+    * the (doc_id, text) corpus up to nine-tenths of the largest doc_id,
+    * staged by [[graft.sources.Staged]] (rebuilt when `documents`
+    * changes); returns its value and the remaining docs as the batch. */
+  private[graft] def stagedIncrement[A](spark: SparkSession, kind: String,
+      dir: String)(build: (String, DataFrame) => A): (A, DataFrame) = {
+    def docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    val (value, cut) = graft.sources.Staged(spark, kind, dir, Seq("documents")) {
+      prefix =>
         val maxRow = docs.agg(max(col("doc_id"))).head
-        val cutId = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0) * 9 / 10
-        val corpusDir = java.nio.file.Files
-          .createTempDirectory("graft-inc-corpus").toString
-        docs.filter(col("doc_id") <= cutId)
-          .write.parquet(s"$corpusDir/documents.parquet")
-        val id = java.util.UUID.randomUUID().toString.replace("-", "")
-        Dedup.buildMinhashIndex(spark, corpusDir, s"graft_inc_mh_$id")
-        Dedup.buildContainmentIndex(spark, corpusDir, s"graft_inc_cont_$id")
-        (s"graft_inc_mh_$id", s"graft_inc_cont_$id", cutId)
-      })
-    curateIncrement(spark, mh, cont,
-      Tables.documents(spark, dir).filter(col("doc_id") > cut)
-        .select(col("doc_id"), col("text")),
-      minQuality)
+        val cut = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0) * 9 / 10
+        (build(prefix, docs.filter(col("doc_id") <= cut)), cut)
+    }
+    (value, docs.filter(col("doc_id") > cut))
   }
 
   /** Per-stage survivor counts — the funnel report a pipeline run logs. */

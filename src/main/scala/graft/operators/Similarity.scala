@@ -438,28 +438,13 @@ object Similarity {
         "retrain_recommended")
   }
 
-  /** [[ivfRecallAudit]] staging cache — the IVF index builds once per
-    * (SparkContext, dir) as the untimed half of the build/probe split
-    * (the `Pipeline.incStageCache` contract; UUID-fresh names keyed by
-    * applicationId). */
-  private val ivfRecallCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
-  /** The query-surface instance of [[checkIvfRecall]]: stage a
-    * persisted IVF index over the corpus once per session, then emit
-    * the sampled-recall maintenance row. Rows-only (float recall over
-    * k-means lists); the alarm semantics are IvfRecallSpec's planted
-    * drift scenario. */
-  def ivfRecallAudit(spark: SparkSession, dir: String): DataFrame = {
-    val name = ivfRecallCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir), _ => {
-        val n = "graft_ivfrec_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        buildIvfIndex(spark, dir, n)
-        n
-      })
-    checkIvfRecall(spark, name)
-  }
+  /** The query-surface instance of [[checkIvfRecall]], over an IVF
+    * index of the corpus staged by [[graft.sources.Staged]]. Rows-only
+    * (float recall over k-means lists); the alarm semantics are
+    * IvfRecallSpec's planted drift scenario. */
+  def ivfRecallAudit(spark: SparkSession, dir: String): DataFrame =
+    checkIvfRecall(spark, graft.sources.Staged(spark, "graft_ivfrec", dir,
+      Seq("embeddings")) { name => buildIvfIndex(spark, dir, name); name })
 
   /** The stored codebook of index `name` at pin `pin` as K×dim doubles
     * — dim-bounded driver state (K centroids, never corpus rows). The
@@ -1841,23 +1826,13 @@ object Similarity {
         "retrain_recommended")
   }
 
-  private val ivfPqRecallCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
-  /** Query-surface instance of [[checkIvfPqRecall]] — stage the
-    * compressed index once per session, emit the two-face recall row.
-    * Rows-only (float Lloyd + ADC); semantics are IvfPqSpec's planted
-    * lossless fixture and the real-data bound below. */
-  def ivfPqRecallAudit(spark: SparkSession, dir: String): DataFrame = {
-    val name = ivfPqRecallCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir), _ => {
-        val n = "graft_ivfpqrec_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        buildIvfPqIndex(spark, dir, n)
-        n
-      })
-    checkIvfPqRecall(spark, name)
-  }
+  /** Query-surface instance of [[checkIvfPqRecall]] — the compressed
+    * index staged like [[ivfRecallAudit]]'s, then the two-face recall
+    * row. Rows-only (float Lloyd + ADC); semantics are IvfPqSpec's
+    * planted lossless fixture and the real-data bound below. */
+  def ivfPqRecallAudit(spark: SparkSession, dir: String): DataFrame =
+    checkIvfPqRecall(spark, graft.sources.Staged(spark, "graft_ivfpqrec", dir,
+      Seq("embeddings")) { name => buildIvfPqIndex(spark, dir, name); name })
 
   /** One row of the IVF-PQ budget tuner's priced table. */
   case class PqPlan(m: Int, codebookK: Int, nProbe: Int, rerank: Int,

@@ -415,30 +415,15 @@ object Suffix {
 
   /** [[probeSpanClip]] as a query face (q_span_clip_inc), the
     * corpusIncrement staging convention: the first nine-tenths of the
-    * id range is the indexed corpus (span index staged once per
-    * session — the untimed half of the build/probe split), the last
-    * tenth is the arriving wave, clipped at O(batch). */
+    * id range is the indexed corpus (span index staged by
+    * `Pipeline.stagedIncrement` — the untimed half of the build/probe
+    * split), the last tenth is the arriving wave, clipped at O(batch). */
   def spanClipIncrement(spark: SparkSession, dir: String): DataFrame = {
-    val (name, cut) = spanStageCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir), _ => {
-        val docs = Tables.documents(spark, dir)
-        val maxRow = docs.agg(max(col("doc_id"))).head
-        val cutId = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0) * 9 / 10
-        val id = java.util.UUID.randomUUID().toString.replace("-", "")
-        buildSpanIndexOf(spark,
-          docs.filter(col("doc_id") <= cutId)
-            .select(col("doc_id"), col("text")),
-          s"graft_span_$id")
-        (s"graft_span_$id", cutId)
-      })
-    probeSpanClip(spark, name,
-      Tables.documents(spark, dir).filter(col("doc_id") > cut)
-        .select(col("doc_id"), col("text")))
+    val (name, batch) = Pipeline.stagedIncrement(spark, "graft_span", dir) {
+      (prefix, corpus) => buildSpanIndexOf(spark, corpus, prefix); prefix
+    }
+    probeSpanClip(spark, name, batch)
   }
-
-  private val spanStageCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      (String, Long)]()
 
   /** GENERATED DuckDB oracle for [[spanClasses]] — the shared-constant
     * contract of [[spanOracleSql]]. */

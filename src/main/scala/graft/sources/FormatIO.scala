@@ -511,6 +511,26 @@ object FormatIO {
     new org.apache.hadoop.fs.Path(
       spark.sessionState.conf.warehousePath, s"_graft_epochs/$name")
 
+  /** Drop every catalog table named `prefix*`, then the dirs
+    * [[deleteIndexDirs]] deletes — evicting one staged index family. */
+  def dropIndex(spark: SparkSession, prefix: String): Unit = {
+    val catalog = spark.sessionState.catalog
+    catalog.listTables(catalog.getCurrentDatabase, s"$prefix*")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.quotedString}"))
+    deleteIndexDirs(new org.apache.hadoop.fs.Path(spark.sessionState.conf.warehousePath),
+      spark.sparkContext.hadoopConfiguration, prefix)
+  }
+
+  /** Delete the table and `_graft_epochs` dirs named `prefix*` under
+    * `warehouse` through the file system alone (no catalog). */
+  private[graft] def deleteIndexDirs(warehouse: org.apache.hadoop.fs.Path,
+      conf: org.apache.hadoop.conf.Configuration, prefix: String): Unit = {
+    val fs = warehouse.getFileSystem(conf)
+    Seq(warehouse, new org.apache.hadoop.fs.Path(warehouse, "_graft_epochs"))
+      .filter(fs.exists).flatMap(d => fs.listStatus(d).map(_.getPath))
+      .filter(_.getName.startsWith(prefix)).foreach(fs.delete(_, true))
+  }
+
   /** (Re)initialize index `name`'s epoch state at committed epoch 0 —
     * every index build ends with this. */
   def initIndexEpoch(spark: SparkSession, name: String): Unit = {

@@ -59,7 +59,8 @@ object Tables {
     // list before inferring: a rewrite racing this load can at worst file
     // the new schema under the replaced files' key, which no later
     // listing produces
-    val key = fingerprint(spark, path)
+    val key = listing(spark, path)
+      .map(SchemaKey(path, _, inferenceConfs.map(spark.conf.getOption)))
     key.flatMap(k => schemas.synchronized(Option(schemas.get(k)))) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None =>
@@ -70,19 +71,19 @@ object Tables {
     }
   }
 
-  /** None when nothing is at `path`; the read then raises Spark's own
-    * PATH_NOT_FOUND instead of Hadoop's FileNotFoundException. Plain
-    * `listStatus`, not `listFiles`: a located status makes the local file
-    * system fork a shell per file for its permissions. */
-  private def fingerprint(spark: SparkSession, path: String): Option[SchemaKey] =
+  /** The sorted (file, length, mtime) under `path`, the fingerprint of
+    * the schema map and of [[Staged]]; None when nothing is there (the
+    * read then raises Spark's PATH_NOT_FOUND). `listStatus`, not
+    * `listFiles`: a located status forks a shell per local file. */
+  private[graft] def listing(spark: SparkSession,
+      path: String): Option[Seq[(String, Long, Long)]] =
     try {
       val p = new Path(path)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
       def leaves(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq.flatMap { f =>
         if (f.isDirectory) leaves(f.getPath) else Seq(f)
       }
-      val files = leaves(p).map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
-      Some(SchemaKey(path, files.sorted, inferenceConfs.map(spark.conf.getOption)))
+      Some(leaves(p).map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted)
     } catch { case _: FileNotFoundException => None }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")

@@ -49,13 +49,9 @@ class GraphSpec extends AnyFunSuite {
     val t = "graft_test_pr_jobcount_adj"
     graft.operators.Graph.stageAdjacency(edges, "a", "b", t)
     def jobsInGroup(group: String): Int = {
-      // async listener queue — poll until the job-id set stops growing
-      def now = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-      var last = -1; var cur = now; var spins = 0
-      while (cur != last && spins < 50) {
-        last = cur; Thread.sleep(100); cur = now; spins += 1
-      }
-      cur
+      // the status tracker fills from the async listener queue
+      org.apache.spark.graft.BusDrain.drain(spark.sparkContext)
+      spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
     }
     def grouped[A](group: String)(f: => A): A = {
       spark.sparkContext.setJobGroup(group, group)
