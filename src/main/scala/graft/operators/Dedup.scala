@@ -1651,8 +1651,7 @@ object Dedup {
         .write.format("parquet")
         .mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
         .saveAsTable(name)
-      name
-    })
+    }._1)
 
   /** FELLEGI–SUNTER probabilistic record-linkage scoring (Fellegi &
     * Sunter 1969) over the lossless deletion-blocked candidate pairs —

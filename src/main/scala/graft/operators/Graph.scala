@@ -308,8 +308,7 @@ object Graph {
       // so the query face's presentation sort is wasted here
       stageAdjacency(Dedup.minhashPairsOf(
         graft.sources.Tables.documents(spark, dir)), "doc_a", "doc_b", t)
-      t
-    }
+    }._1
     pagerankOnAdjacency(spark, adjTable)
       .select(col("id").as("doc_id"), round(col("pr"), 6).as("centrality"))
       .orderBy(col("doc_id"))

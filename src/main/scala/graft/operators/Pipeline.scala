@@ -232,29 +232,30 @@ object Pipeline {
     * SQL form); the full-rebuild parity is spec-proved. */
   def corpusIncrement(spark: SparkSession, dir: String,
       minQuality: Double = 0.3): DataFrame = {
-    val ((mh, cont), batch) = stagedIncrement(spark, "graft_inc", dir) {
+    val (prefix, batch) = stagedIncrement(spark, "graft_inc", dir) {
       (prefix, corpus) =>
         Dedup.buildMinhashIndexOf(spark, corpus, s"${prefix}_mh")
         Dedup.buildContainmentIndexOf(spark, corpus, s"${prefix}_cont")
-        (s"${prefix}_mh", s"${prefix}_cont")
     }
-    curateIncrement(spark, mh, cont, batch, minQuality)
+    curateIncrement(spark, s"${prefix}_mh", s"${prefix}_cont", batch, minQuality)
   }
 
   /** The increment faces' split of `dir`'s documents: `build` indexes
     * the (doc_id, text) corpus up to nine-tenths of the largest doc_id,
     * staged by [[graft.sources.Staged]] (rebuilt when `documents`
-    * changes); returns its value and the remaining docs as the batch. */
-  private[graft] def stagedIncrement[A](spark: SparkSession, kind: String,
-      dir: String)(build: (String, DataFrame) => A): (A, DataFrame) = {
+    * changes); returns the staged prefix and the remaining docs as the
+    * batch. */
+  private[graft] def stagedIncrement(spark: SparkSession, kind: String,
+      dir: String)(build: (String, DataFrame) => Unit): (String, DataFrame) = {
     def docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val (value, cut) = graft.sources.Staged(spark, kind, dir, Seq("documents")) {
+    val (prefix, cut) = graft.sources.Staged(spark, kind, dir, Seq("documents")) {
       prefix =>
         val maxRow = docs.agg(max(col("doc_id"))).head
         val cut = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0) * 9 / 10
-        (build(prefix, docs.filter(col("doc_id") <= cut)), cut)
+        build(prefix, docs.filter(col("doc_id") <= cut))
+        cut
     }
-    (value, docs.filter(col("doc_id") > cut))
+    (prefix, docs.filter(col("doc_id") > cut))
   }
 
   /** Per-stage survivor counts — the funnel report a pipeline run logs. */

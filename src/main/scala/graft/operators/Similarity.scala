@@ -444,7 +444,7 @@ object Similarity {
     * IvfRecallSpec's planted drift scenario. */
   def ivfRecallAudit(spark: SparkSession, dir: String): DataFrame =
     checkIvfRecall(spark, graft.sources.Staged(spark, "graft_ivfrec", dir,
-      Seq("embeddings")) { name => buildIvfIndex(spark, dir, name); name })
+      Seq("embeddings"))(buildIvfIndex(spark, dir, _))._1)
 
   /** The stored codebook of index `name` at pin `pin` as K×dim doubles
     * — dim-bounded driver state (K centroids, never corpus rows). The
@@ -1832,7 +1832,7 @@ object Similarity {
     * planted lossless fixture and the real-data bound below. */
   def ivfPqRecallAudit(spark: SparkSession, dir: String): DataFrame =
     checkIvfPqRecall(spark, graft.sources.Staged(spark, "graft_ivfpqrec", dir,
-      Seq("embeddings")) { name => buildIvfPqIndex(spark, dir, name); name })
+      Seq("embeddings"))(buildIvfPqIndex(spark, dir, _))._1)
 
   /** One row of the IVF-PQ budget tuner's priced table. */
   case class PqPlan(m: Int, codebookK: Int, nProbe: Int, rerank: Int,

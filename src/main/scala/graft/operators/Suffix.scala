@@ -420,7 +420,7 @@ object Suffix {
     * split), the last tenth is the arriving wave, clipped at O(batch). */
   def spanClipIncrement(spark: SparkSession, dir: String): DataFrame = {
     val (name, batch) = Pipeline.stagedIncrement(spark, "graft_span", dir) {
-      (prefix, corpus) => buildSpanIndexOf(spark, corpus, prefix); prefix
+      (prefix, corpus) => buildSpanIndexOf(spark, corpus, prefix)
     }
     probeSpanClip(spark, name, batch)
   }

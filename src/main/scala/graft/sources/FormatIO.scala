@@ -513,7 +513,7 @@ object FormatIO {
 
   /** Drop every catalog table named `prefix*`, then the dirs
     * [[deleteIndexDirs]] deletes — evicting one staged index family. */
-  def dropIndex(spark: SparkSession, prefix: String): Unit = {
+  private[graft] def dropIndex(spark: SparkSession, prefix: String): Unit = {
     val catalog = spark.sessionState.catalog
     catalog.listTables(catalog.getCurrentDatabase, s"$prefix*")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.quotedString}"))

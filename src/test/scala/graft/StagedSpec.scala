@@ -147,7 +147,7 @@ class StagedSpec extends AnyFunSuite {
     })
     assert(stagedDirs(kind).isEmpty)
     assert(spark.catalog.listTables().collect().forall(!_.name.startsWith(kind)))
-    assert(Staged(spark, kind, dir, Seq("documents"))(_ => "built") == "built")
+    assert(Staged(spark, kind, dir, Seq("documents"))(_ => "built")._2 == "built")
   }
 
   test("eight pooled concurrent dupCentrality calls on a fresh dir " +

@@ -289,22 +289,23 @@ class StreamingSpec extends AnyFunSuite {
       assert(out == Map(1L -> false, 2L -> false, 3L -> true,
         4L -> true, 5L -> false),
         s"unexpected verdicts: $out")
-      // TTL path smoke: with a TTL the query runs in ProcessingTime
-      // mode, which asks for a no-data micro-batch on every trigger, so
-      // processAllAvailable returns only with no-data batches off (the
-      // query reads the conf when it starts)
+      // TTL path smoke: with a TTL the query runs in ProcessingTime mode,
+      // whose timers keep scheduling micro-batches — processAllAvailable
+      // never quiesces, so poll the sink with a deadline instead
       val input2 = MemoryStream[Streams.Doc]
-      sp.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val q2 = try Streams.fingerprintDedupStream(sp, input2.toDS(),
-          ttl = java.time.Duration.ofHours(1))
+      val q2 = Streams.fingerprintDedupStream(sp, input2.toDS(),
+        ttl = java.time.Duration.ofHours(1))
         .writeStream.format("memory").queryName("fp_dedup_ttl_out")
         .outputMode("update").start()
-      finally sp.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
       input2.addData(
         Streams.Doc(11, ts(1), "ttl path one"),
         Streams.Doc(12, ts(2), "ttl path one"))
-      q2.processAllAvailable()
-      val rows = sp.sql("SELECT doc_id, is_dup FROM fp_dedup_ttl_out").collect()
+      val deadline = System.currentTimeMillis() + 120000
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      while (rows.length < 2 && System.currentTimeMillis() < deadline) {
+        Thread.sleep(500)
+        rows = sp.sql("SELECT doc_id, is_dup FROM fp_dedup_ttl_out").collect()
+      }
       q2.stop()
       val ttlOut = rows.map(r => r.getLong(0) -> r.getBoolean(1)).toMap
       assert(ttlOut == Map(11L -> false, 12L -> true),
