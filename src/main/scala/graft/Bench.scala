@@ -9,6 +9,7 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", GraftSession.WarehouseDir)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional subset for local iteration (comma-separated names);

@@ -11,6 +11,11 @@ import org.apache.spark.sql.SparkSession
   * overrides via `--conf` and AQE coalesces from there.
   */
 object GraftSession {
+  /** Where managed tables (bucketed adjacency/index layouts, staged
+    * indexes) land: tmp, not a ./spark-warehouse directory next to the
+    * driver. Every graft main sets it. */
+  val WarehouseDir = s"${System.getProperty("java.io.tmpdir")}/graft-warehouse"
+
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
               shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
@@ -26,10 +31,7 @@ object GraftSession {
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // managed tables (bucketed adjacency/index layouts) land in tmp,
-      // not a ./spark-warehouse directory next to the driver
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
+      .config("spark.sql.warehouse.dir", WarehouseDir)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
 
   def getOrCreate(): SparkSession = {

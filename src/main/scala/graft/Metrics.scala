@@ -8,7 +8,9 @@ import java.util.concurrent.atomic.AtomicLong
 /** Physical-execution metrics capture (bytes scanned, shuffle volume,
   * records) via a task-level SparkListener — the observability hook a
   * production deployment wires to its metrics backend. Task metrics are
-  * AQE-proof, unlike walking executed-plan SQL metrics.
+  * AQE-proof, unlike walking executed-plan SQL metrics. [[phase]]
+  * names the jobs an operator step launches, so the same listeners can
+  * tell where inside a composed operator the time went.
   */
 object Metrics {
 
@@ -32,25 +34,26 @@ object Metrics {
     }
   }
 
-  /** Attach named single-pass health counters to a DataFrame via the
-    * engine's `observe` API: the aggregates (row counts, null counts,
-    * gate-failure counts, …) are computed INSIDE the same job that
-    * materializes the frame — no second pass over the data, which at
-    * 100 TB is the difference between "metrics for free" and "metrics
-    * double the bill". Returns the observed frame plus the Observation
-    * handle; call `Metrics.observed(obs)` after an action to read the
-    * settled values. */
-  def withObservation(df: org.apache.spark.sql.DataFrame, name: String,
-      exprs: Seq[org.apache.spark.sql.Column])
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation(name)
-    (df.observe(obs, exprs.head, exprs.tail: _*), obs)
+  /** Name the Spark jobs `body` launches on the calling thread: sets
+    * `spark.job.description` to `name` for the length of `body`, then
+    * restores the previous value (null included), also when `body`
+    * throws. Operators wrap their eager materializations in a phase
+    * named `<operator>.<step>` (`jaccard.sets`, `increment.near_hit`),
+    * so a job listener can group jobs by the code that launched them
+    * (`tools.PerfProbe` prints that breakdown). An inner scope
+    * overrides an outer one until it ends. A thread created inside a
+    * scope starts with its name (Spark copies local properties into
+    * child threads) and may open its own. */
+  def phase[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(JobDescription)
+    sc.setLocalProperty(JobDescription, name)
+    try body finally sc.setLocalProperty(JobDescription, prev)
   }
 
-  /** Blocking read of an Observation's metrics (the observed frame must
-    * have completed an action first). */
-  def observed(obs: org.apache.spark.sql.Observation): Map[String, Any] =
-    obs.get
+  /** The local property Spark copies into every job's properties as
+    * its description. */
+  val JobDescription = "spark.job.description"
 
   /** Run `action` counting the Spark JOBS launched inside — the
     * scheduling-overhead audit for driver-side evaluation loops: a grid

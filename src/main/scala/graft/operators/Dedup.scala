@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.HashExpressions._
+import graft.Metrics
 import graft.sources.Tables
 
 /** Deduplication operators over `documents` (SURVEY §2c 25-28).
@@ -668,7 +669,7 @@ object Dedup {
     val setsPlan = tokenShingleSetsOf(Tables.documents(spark, dir), shingle)
     // the frequency/prefix pipeline reads the shingles twice → one
     // materialized copy for that side only
-    val sets = setsPlan.localCheckpoint()
+    val sets = Metrics.phase(spark, "jaccard.sets")(setsPlan.localCheckpoint())
     val dfreq = sets.select(explode(col("st")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("df"))
     // PPJoin prunes INSIDE the candidate join, before the distinct
@@ -692,7 +693,8 @@ object Dedup {
     // sides; the candidate join and the verify arrays carry 8-byte tids
     // instead of shingle strings (§2.3 shuffle fewer bytes, measured 2×
     // on the verify)
-    val enc = encodedSets(sets, dfreq).localCheckpoint()
+    val enc = Metrics.phase(spark, "jaccard.encoded")(
+      encodedSets(sets, dfreq).localCheckpoint())
     def side(s: String): DataFrame = enc
       .select(col("doc_id").as(s"doc_$s"), col("sz").as(s"sz_$s"),
         posexplode(slice(col("sti"), lit(1),
@@ -767,10 +769,11 @@ object Dedup {
     * and A position. */
   def containmentJoinOn(docs: DataFrame,
       tau: Double = 0.6, shingle: Int = 3): DataFrame = {
+    val spark = docs.sparkSession
     val setsPlan = tokenShingleSetsOf(docs, shingle)
     // the frequency/prefix pipeline reads the shingles twice → one
     // materialized copy for that side only
-    val sets = setsPlan.localCheckpoint()
+    val sets = Metrics.phase(spark, "containment.sets")(setsPlan.localCheckpoint())
     val dfreq = sets.select(explode(col("st")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val prefLen: Column => Column =
@@ -782,7 +785,8 @@ object Dedup {
     // carry 8-byte tids instead of shingle strings (§2.3, measured 2× on
     // the verify join). The B side needs no ordering, so its postings
     // are a plain explode of the same encoded array.
-    val enc = encodedSets(sets, dfreq).localCheckpoint()
+    val enc = Metrics.phase(spark, "containment.encoded")(
+      encodedSets(sets, dfreq).localCheckpoint())
     val prefixes = enc
       .select(col("doc_id").as("doc_a"), col("sz").as("sz_a"),
         posexplode(slice(col("sti"), lit(1),
@@ -1070,7 +1074,8 @@ object Dedup {
     * lose reverse-direction recall; enforced against `_meta`). */
   def probeContainmentBoth(spark: SparkSession, name: String,
       newDocs: DataFrame, tau: Double = 0.6): DataFrame = {
-    val meta = spark.table(s"${name}_meta").collect().head
+    val meta = Metrics.phase(spark, "containment_both.meta")(
+      spark.table(s"${name}_meta").collect().head)
     val tauBuild = meta.getAs[Double]("tau")
     val shingle = meta.getAs[Int]("shingle")
     require(tau >= tauBuild - 1e-12,
@@ -1078,7 +1083,8 @@ object Dedup {
         s"($name stores prefixes sized for $tauBuild; probing below it " +
         "silently loses reverse-direction recall - rebuild at the lower tau)")
     val pin = graft.sources.FormatIO.committedEpoch(spark, name)
-    val sets = tokenShingleSetsOf(newDocs, shingle).localCheckpoint()
+    val sets = Metrics.phase(spark, "containment_both.sets")(
+      tokenShingleSetsOf(newDocs, shingle).localCheckpoint())
     // probe-vocabulary semi-join below the df merge (see
     // probeContainmentIndex): O(probe vocab), not O(corpus vocab)
     val probeToks = sets.select(explode(col("st")).as("tok")).distinct()
@@ -1271,12 +1277,12 @@ object Dedup {
     // pair is lost, and a collision-born candidate fails the exact
     // banded-levenshtein verify below — the result relation is
     // identical
-    val keyed = fenced
+    val keyedPlan = fenced
       .select(col("k") +: col("s") +: blockCols.map(col) :+
         explode(expr(variants)).as("variant_s"): _*)
       .select(col("k") +: col("s") +: blockCols.map(col) :+
         xxhash64(col("variant_s")).as("variant"): _*)
-      .localCheckpoint()
+    val keyed = Metrics.phase(df.sparkSession, "edit.keyed")(keyedPlan.localCheckpoint())
     val a = keyed.select(col("k").as("key_a") +: col("s").as("s_a") +:
       col("variant") +: blockCols.map(col): _*)
     val b = keyed.select(col("k").as("key_b") +: col("s").as("s_b") +:

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Metrics
 import graft.sources.Tables
 
 /** Engine-capability surface that only exists on Spark 4: the VARIANT
@@ -150,16 +151,20 @@ object Modern {
     *    would use reliable checkpoints; the plan shape is the same).
     */
   def blastRadiusOn(spark: SparkSession, pairs: DataFrame,
-      maxHops: Int): DataFrame =
-    if (maxHops <= 2) blastRadiusRecursive(spark, pairs, maxHops)
-    else blastRadiusIterative(pairs, maxHops)
+      maxHops: Int): DataFrame = {
+    // materialize the pair computation ONCE: both strategies read the
+    // pairs several times, and the recursive member re-evaluates its
+    // edge subtree every round — an un-checkpointed containment join
+    // would re-run per hop (measured 29s vs 7s at sf0.1 for maxHops=2)
+    val p = Metrics.phase(spark, "blast.pairs")(pairs.localCheckpoint())
+    if (maxHops <= 2) blastRadiusRecursive(spark, p, maxHops)
+    else Metrics.phase(spark, "blast.rounds")(blastRadiusIterative(p, maxHops))
+  }
 
+  /** The `maxHops` ≤ 2 path of [[blastRadiusOn]] over materialized
+    * `pairs`. */
   private def blastRadiusRecursive(spark: SparkSession, pairs: DataFrame,
       maxHops: Int): DataFrame = {
-    // materialize the pair computation ONCE: the temp views below are
-    // logical plans, and the recursive member re-evaluates its edge
-    // subtree every round — an un-checkpointed containment join would
-    // re-run per hop (measured 29s vs 7s at sf0.1 for maxHops=2).
     // The coalesce sits ON TOP of the checkpoint, so the pair
     // computation itself still materializes at full parallelism (the
     // upstream verify needs the cores — see Dedup.spreadPairs); only
@@ -167,8 +172,7 @@ object Modern {
     // schedules one near-empty task per checkpoint partition over a
     // pair relation that is panel-bounded tiny by contract (measured
     // +0.6 s/query at 32 partitions × 2 subtrees × rounds).
-    val p = pairs.localCheckpoint()
-      .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 8))
+    val p = pairs.coalesce(math.max(1, spark.sparkContext.defaultParallelism / 8))
     // per-invocation view names: fixed names would clobber caller
     // views and race concurrent invocations sharing one session; the
     // views are dropped once the (eagerly analyzed) plan holds their
@@ -199,11 +203,11 @@ object Modern {
     }
   }
 
-  /** Iterative-join BFS (the `maxHops` ≥ 3 path of [[blastRadiusOn]]):
-    * reached ∪= (frontier ⋈ edges) \ reached, one round per hop. */
-  private def blastRadiusIterative(pairs: DataFrame,
+  /** Iterative-join BFS (the `maxHops` ≥ 3 path of [[blastRadiusOn]])
+    * over materialized `pairs`: reached ∪= (frontier ⋈ edges) \
+    * reached, one round per hop. */
+  private def blastRadiusIterative(p: DataFrame,
       maxHops: Int): DataFrame = {
-    val p = pairs.localCheckpoint()
     val edges = p.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .union(p.select(col("doc_b").as("a"), col("doc_a").as("b")))
       .distinct()

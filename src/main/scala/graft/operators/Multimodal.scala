@@ -494,7 +494,8 @@ object Multimodal {
     // both sides, and without a checkpoint the whole decode/hash
     // mapPartitions stage under it executes twice (aliases differ, so
     // ReuseExchange cannot fold the sides)
-    val bands = phashBands(hashes).localCheckpoint()
+    val bands = graft.Metrics.phase(hashes.sparkSession, "phash_dup.bands")(
+      phashBands(hashes).localCheckpoint())
     bands.select(col("doc_id").as("doc_a"), col("phash").as("ha"),
         col("band_key"), col("band_id"), col("band_sig"))
       .join(bands.select(col("doc_id").as("doc_b"), col("phash").as("hb"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Metrics
 import graft.sources.Tables
 
 /** End-to-end training-corpus curation: the §2c operators composed the
@@ -104,10 +105,11 @@ object Pipeline {
       contIndex: String, batch: DataFrame,
       minQuality: Double = 0.3,
       spanIndex: Option[String] = None): DataFrame = {
-    val batchDocs = batch.select(col("doc_id"), col("text")).localCheckpoint()
+    val batchDocs = Metrics.phase(spark, "increment.batch")(
+      batch.select(col("doc_id"), col("text")).localCheckpoint())
     val bIds = batchDocs.select(col("doc_id"))
-    val tau = spark.table(s"${contIndex}_meta").collect().head
-      .getAs[Double]("tau")
+    val tau = Metrics.phase(spark, "increment.meta")(
+      spark.table(s"${contIndex}_meta").collect().head.getAs[Double]("tau"))
     // The probe branches below are INDEPENDENT, and three of them carry
     // eager materializations during CONSTRUCTION (the near-hit probe
     // checkpoint, the within-batch LSH bands + component labeling, the
@@ -124,7 +126,7 @@ object Pipeline {
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    val fNearHit = Future {
+    val fNearHit = Future(Metrics.phase(spark, "increment.near_hit") {
       val nearPairs = Dedup.probeMinhashIndex(spark, mhIndex, batchDocs)
       nearPairs.select(col("doc_a").as("doc_id"))
         .join(bIds, Seq("doc_id"), "left_semi")
@@ -132,15 +134,15 @@ object Pipeline {
           .join(bIds, Seq("doc_id"), "left_semi"))
         .distinct()
         .localCheckpoint()
-    }
-    val fComps = Future {
+    })
+    val fComps = Future(Metrics.phase(spark, "increment.components") {
       Graph.connectedComponents(
         Dedup.minhashPairsOf(batchDocs), "doc_a", "doc_b")
-    }
-    val fLeakWithin = Future {
+    })
+    val fLeakWithin = Future(Metrics.phase(spark, "increment.leak_within") {
       Dedup.splitLeakageOn(batchDocs, tau)
         .select(col("train_doc").as("doc_id")).distinct()
-    }
+    })
     val (nearHit, comps, leakWithin) =
       try {
         (Await.result(fNearHit, Duration.Inf),

@@ -1,9 +1,33 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 class MetricsSpec extends AnyFunSuite {
   import TestSpark._
+
+  /** `body`'s result and the descriptions of the jobs it launched, in
+    * start order (None for a job without one). */
+  private def jobDescriptions[T](body: => T): (T, Seq[Option[String]]) = {
+    val ds = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        ds.add(Option(e.properties.getProperty(Metrics.JobDescription)))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.graft.BusDrain.drain(sc)
+      import scala.jdk.CollectionConverters._
+      (out, ds.asScala.toSeq)
+    } finally sc.removeSparkListener(l)
+  }
+
+  private def description: String =
+    spark.sparkContext.getLocalProperty(Metrics.JobDescription)
+
+  private def oneJob(): Long = spark.sparkContext.parallelize(1 to 10, 2).count()
 
   test("withMetrics captures scan and shuffle volume of the run") {
     val (nRows, m) = Metrics.withMetrics(spark) {
@@ -13,22 +37,6 @@ class MetricsSpec extends AnyFunSuite {
     assert(m.recordsRead > 0, s"expected scanned records, got $m")
     assert(m.bytesRead > 0, s"expected scanned bytes, got $m")
     assert(m.durationMs > 0)
-  }
-
-  test("observe: single-pass health counters match direct recounts") {
-    import org.apache.spark.sql.functions._
-    val docs = graft.sources.Tables.documents(spark, sf)
-    val (observed, obs) = Metrics.withObservation(docs, "health", Seq(
-      count(lit(1)).as("rows"),
-      sum(when(length(col("text")) < 50, 1L).otherwise(0L)).as("short_docs"),
-      count(when(col("lang").isNull, 1)).as("null_lang")))
-    // one action drives BOTH the result and the metrics — no second scan
-    val n = observed.count()
-    val m = Metrics.observed(obs)
-    assert(m("rows") == n)
-    assert(m("short_docs") ==
-      docs.filter(length(col("text")) < 50).count())
-    assert(m("null_lang") == docs.filter(col("lang").isNull).count())
   }
 
   test("a shuffle-free plan reports zero shuffle writes") {
@@ -61,5 +69,75 @@ class MetricsSpec extends AnyFunSuite {
       sc.parallelize(1 to 100, 4).count() + sc.parallelize(1 to 100, 4).count()
     }
     assert(two == 2, s"two count()s launched $two jobs")
+  }
+
+  test("phase names the jobs inside its scope and restores the previous " +
+      "description when the scope returns or throws") {
+    assert(description == null)
+    val (_, named) = jobDescriptions(Metrics.phase(spark, "spec.one")(oneJob()))
+    assert(named == Seq(Some("spec.one")))
+    assert(description == null)
+    spark.sparkContext.setJobDescription("spec.caller")
+    try {
+      intercept[IllegalStateException] {
+        Metrics.phase(spark, "spec.failing") {
+          oneJob()
+          throw new IllegalStateException("boom")
+        }
+      }
+      assert(description == "spec.caller")
+    } finally spark.sparkContext.setJobDescription(null)
+    assert(jobDescriptions(oneJob())._2 == Seq(None))
+  }
+
+  test("a nested phase labels its own jobs and the outer name returns " +
+      "when it ends") {
+    val (_, ds) = jobDescriptions(Metrics.phase(spark, "spec.outer") {
+      oneJob()
+      Metrics.phase(spark, "spec.inner")(oneJob())
+      assert(description == "spec.outer")
+      oneJob()
+    })
+    assert(ds == Seq("spec.outer", "spec.inner", "spec.outer").map(Some(_)))
+  }
+
+  test("a Future on a pool created inside a phase can open its own phase") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val (_, ds) = jobDescriptions(Metrics.phase(spark, "spec.outer") {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      try {
+        val own = Future(Metrics.phase(spark, "spec.branch") { oneJob(); oneJob() })
+        val inherited = Future(oneJob())
+        Await.result(own, Duration.Inf) + Await.result(inherited, Duration.Inf)
+      } finally pool.shutdown()
+    })
+    assert(ds.sortBy(_.toString) ==
+      Seq("spec.branch", "spec.branch", "spec.outer").map(Some(_)))
+    assert(description == null)
+  }
+
+  test("shipped operators name every job they launch before the final " +
+      "action") {
+    // the within-batch leakage branch runs containmentJoinOn, whose own
+    // phases override increment.leak_within
+    val expected = Map(
+      "q_jaccard_prefix" -> Set("jaccard.sets", "jaccard.encoded"),
+      "q_corpus_increment" -> Set("increment.batch", "increment.meta",
+        "increment.near_hit", "increment.components", "containment.sets",
+        "containment.encoded", "containment_both.meta", "containment_both.sets"))
+    expected.foreach { case (key, names) =>
+      val fn = SparkEntry.queries(key)
+      fn(spark, sf).count() // warm-up: schemas inferred, indexes staged
+      val (df, built) = jobDescriptions(fn(spark, sf))
+      assert(built.nonEmpty && built.forall(_.isDefined),
+        s"$key launched unnamed jobs before its final action: $built")
+      assert(names.subsetOf(built.flatten.toSet),
+        s"$key: expected phases ${names.toSeq.sorted}, saw ${built.flatten.distinct}")
+      val (_, last) = jobDescriptions(df.count())
+      assert(last.nonEmpty && last.forall(_.isEmpty),
+        s"$key: the final action ran under a phase: $last")
+    }
   }
 }
