@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
   /** Where managed tables (bucketed adjacency/index layouts, staged
     * indexes) land: tmp, not a ./spark-warehouse directory next to the
-    * driver. Every graft main sets it. */
+    * driver. [[builder]], `Bench` and `Verify` all set it. */
   val WarehouseDir = s"${System.getProperty("java.io.tmpdir")}/graft-warehouse"
 
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",

@@ -1,9 +1,12 @@
 package graft
 
 import org.apache.spark.graft.BusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
 
 /** Physical-execution metrics capture (bytes scanned, shuffle volume,
   * records) via a task-level SparkListener — the observability hook a
@@ -53,7 +56,38 @@ object Metrics {
 
   /** The local property Spark copies into every job's properties as
     * its description. */
-  val JobDescription = "spark.job.description"
+  private[graft] val JobDescription = "spark.job.description"
+
+  /** One Spark job run inside [[withJobs]]: its description (the
+    * [[phase]] it ran under; None outside every phase) and its start
+    * and end, epoch ms. */
+  case class Job(id: Int, description: Option[String], startMs: Long,
+      endMs: Long)
+
+  /** Run `action` recording the Spark jobs launched inside, in
+    * submission order. */
+  def withJobs[T](spark: SparkSession)(action: => T): (T, Seq[Job]) = {
+    val started = new ConcurrentHashMap[Int, (Option[String], Long)]
+    val jobs = new ConcurrentLinkedQueue[Job]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.put(e.jobId, (Option(e.properties)
+          .flatMap(p => Option(p.getProperty(JobDescription))), e.time))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(started.remove(e.jobId)).foreach { case (d, t) =>
+          jobs.add(Job(e.jobId, d, t, e.time))
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      val out = action
+      // every job of the action has ended before it returns; draining
+      // the bus delivers their events
+      BusDrain.drain(sc)
+      (out, jobs.asScala.toSeq.sortBy(_.id))
+    } finally sc.removeSparkListener(l)
+  }
 
   /** Run `action` counting the Spark JOBS launched inside — the
     * scheduling-overhead audit for driver-side evaluation loops: a grid
@@ -61,18 +95,8 @@ object Metrics {
     * of one, which at a 1000-executor cluster is |cells| round trips of
     * scheduler latency on an otherwise sample-sized computation. */
   def withJobCount[T](spark: SparkSession)(action: => T): (T, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = action
-      BusDrain.drain(spark.sparkContext)
-      (out, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (out, jobs) = withJobs(spark)(action)
+    (out, jobs.size)
   }
 
   /** Run `action` with a listener attached; returns (result, aggregated

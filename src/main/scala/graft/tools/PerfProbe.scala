@@ -1,13 +1,9 @@
 package graft.tools
 
-import org.apache.spark.graft.BusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import scala.collection.mutable
-
 /** Ad-hoc perf probe: time named queries (steady state, min of N), then
-  * run each once more, untimed, under a job listener and print where
-  * that run went, grouped by the job descriptions the operators set
-  * with [[graft.Metrics.phase]]:
+  * run each once more, untimed, and print where that run went, grouping
+  * its jobs by the descriptions the operators set with
+  * [[graft.Metrics.phase]]:
   *
   *   [phase] <key> wall=<s> covered=<%>    phase spans' union / wall
   *   [phase] <key>   <name> jobs=<n> span=<s>   first start to last end
@@ -19,20 +15,6 @@ import scala.collection.mutable
   * usage: runMain graft.tools.PerfProbe <sfDir> <reps> <q1,q2,...>
   */
 object PerfProbe {
-  /** (description or "(final)", start ms, end ms) of each job. */
-  private class Jobs extends SparkListener {
-    private val starts = mutable.Map.empty[Int, (String, Long)]
-    val done = mutable.ArrayBuffer.empty[(String, Long, Long)]
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      val desc = Option(e.properties)
-        .flatMap(p => Option(p.getProperty(graft.Metrics.JobDescription)))
-      starts(e.jobId) = (desc.getOrElse("(final)"), e.time)
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-      starts.remove(e.jobId).foreach { case (d, t0) => done += ((d, t0, e.time)) }
-    }
-  }
-
   /** Total length of the union of `spans`, each clipped to [lo, hi]. */
   private def covered(spans: Seq[(Long, Long)], lo: Long, hi: Long): Long =
     spans.map { case (a, b) => (a max lo, b min hi) }.filter(s => s._1 < s._2)
@@ -47,7 +29,6 @@ object PerfProbe {
     val names = if (args.length > 2) args(2).split(",").toSeq
       else Seq("q_completion_rate", "q_poc_registry", "q_status_pivot")
     val spark = graft.GraftSession.getOrCreate()
-    val sc = spark.sparkContext
     names.foreach { n =>
       val fn = graft.SparkEntry.queries(n)
       fn(spark, sfDir).count() // warmup
@@ -58,25 +39,22 @@ object PerfProbe {
       }
       println(f"[perf] $n min=${times.min}%.3f times=${times.map(t => f"$t%.3f").mkString(",")}")
 
-      val jobs = new Jobs
-      sc.addSparkListener(jobs)
-      val t0 = System.currentTimeMillis()
-      try fn(spark, sfDir).count() finally {
-        val t1 = System.currentTimeMillis()
-        BusDrain.drain(sc)
-        sc.removeSparkListener(jobs)
-        val byPhase = jobs.done.toSeq.groupBy(_._1).toSeq
-          .map { case (d, js) => (d, js.size, js.map(_._2).min, js.map(_._3).max) }
-          .sortBy(_._3)
-        val wall = math.max(1L, t1 - t0)
-        val inPhases = covered(byPhase.map(p => (p._3, p._4)), t0, t1)
-        val busy = covered(jobs.done.toSeq.map(j => (j._2, j._3)), t0, t1)
-        println(f"[phase] $n wall=${wall / 1e3}%.3fs covered=${100.0 * inPhases / wall}%.1f%%")
-        byPhase.foreach { case (d, k, a, b) =>
-          println(f"[phase] $n   $d%-24s jobs=$k%-3d span=${(b - a) / 1e3}%.3fs")
-        }
-        println(f"[phase] $n   ${"(no job)"}%-24s ${(wall - busy) / 1e3}%.3fs")
+      val ((t0, t1), jobs) = graft.Metrics.withJobs(spark) {
+        val t0 = System.currentTimeMillis()
+        fn(spark, sfDir).count()
+        (t0, System.currentTimeMillis())
       }
+      val phases = jobs.groupBy(_.description.getOrElse("(final)")).toSeq
+        .map { case (d, js) => (d, js.size, js.map(_.startMs).min, js.map(_.endMs).max) }
+        .sortBy(_._3)
+      val wall = math.max(1L, t1 - t0)
+      val inPhases = covered(phases.map(p => (p._3, p._4)), t0, t1)
+      val busy = covered(jobs.map(j => (j.startMs, j.endMs)), t0, t1)
+      println(f"[phase] $n wall=${wall / 1e3}%.3fs covered=${100.0 * inPhases / wall}%.1f%%")
+      phases.foreach { case (d, k, a, b) =>
+        println(f"[phase] $n   $d%-24s jobs=$k%-3d span=${(b - a) / 1e3}%.3fs")
+      }
+      println(f"[phase] $n   ${"(no job)"}%-24s ${(wall - busy) / 1e3}%.3fs")
       if (sys.env.get("PERF_EXPLAIN").contains("1"))
         fn(spark, sfDir).explain("formatted")
     }

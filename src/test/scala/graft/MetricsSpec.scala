@@ -1,27 +1,15 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 class MetricsSpec extends AnyFunSuite {
   import TestSpark._
 
   /** `body`'s result and the descriptions of the jobs it launched, in
-    * start order (None for a job without one). */
+    * submission order. */
   private def jobDescriptions[T](body: => T): (T, Seq[Option[String]]) = {
-    val ds = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        ds.add(Option(e.properties.getProperty(Metrics.JobDescription)))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      org.apache.spark.graft.BusDrain.drain(sc)
-      import scala.jdk.CollectionConverters._
-      (out, ds.asScala.toSeq)
-    } finally sc.removeSparkListener(l)
+    val (out, jobs) = Metrics.withJobs(spark)(body)
+    (out, jobs.map(_.description))
   }
 
   private def description: String =
