@@ -570,7 +570,11 @@ object Multimodal {
     * pHash index — O(batch) per wave, bucket placement identical to a
     * rebuild's, published under one epoch commit
     * (`append(batch) ∘ build(corpus)` is probe-equal to
-    * `build(corpus ∪ batch)`, parity-spec-proved). */
+    * `build(corpus ∪ batch)`, parity-spec-proved). Replay-safe by
+    * probe construction: a band row duplicated by a stream replay
+    * (`Streams.foreachBatchStream`) cannot create a phantom pair —
+    * pairs are distinct-ed and Hamming-verified against the full
+    * 64-bit hash. */
   def appendToPhashIndex(spark: SparkSession, name: String,
       newHashes: DataFrame): Unit = {
     val e = graft.sources.FormatIO.stageIndexEpoch(spark, name,

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Metrics
+import org.apache.spark.graft.CancelTagged
 import graft.sources.Tables
 
 /** End-to-end training-corpus curation: the §2c operators composed the
@@ -20,31 +21,52 @@ import graft.sources.Tables
   */
 object Pipeline {
 
+  /** Run independent `branches` concurrently, one thread each, and
+    * return their results in order. Every Spark job a branch launches
+    * carries a job tag of this call. When a branch throws, the other
+    * branches' jobs are cancelled — repeatedly until those branches
+    * have ended, since a branch between two jobs starts its next one
+    * after a cancel — and the first failure is rethrown, so a failed
+    * composition leaves none of its jobs running. */
+  private[graft] def inParallel[T](spark: SparkSession)(
+      branches: (() => T)*): Seq[T] = {
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService,
+      Executors, TimeUnit}
+    val sc = spark.sparkContext
+    val tag = s"graft-branches-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(branches.size)
+    val done = new ExecutorCompletionService[T](pool)
+    // the pool's threads end with the call, so the tag needs no removal
+    val futures = branches.map(b => done.submit { () => sc.addJobTag(tag); b() })
+    pool.shutdown()
+    try {
+      branches.foreach(_ => done.take().get())
+      futures.map(_.get())
+    } catch {
+      case failed: Throwable =>
+        do CancelTagged(sc, tag)
+        while (!pool.awaitTermination(50, TimeUnit.MILLISECONDS))
+        // jobs an ended branch left running (asynchronous AQE stages)
+        CancelTagged(sc, tag)
+        throw (failed match {
+          case e: ExecutionException => e.getCause
+          case e => e
+        })
+    }
+  }
+
   def curateCorpus(spark: SparkSession, dir: String,
       minQuality: Double = 0.3): DataFrame = {
     // near-dup clustering and split leakage both materialize expensive
     // subtrees during CONSTRUCTION (LSH bands + component labeling;
     // shingle sets + df-ordered prefixes). They are independent —
-    // overlapped on a 2-thread pool so the eager half of the composed
+    // overlapped on two threads so the eager half of the composed
     // pipeline costs the slower branch, not the sum (guide §2.6)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContextExecutorService =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val fNearKeep = Future {
-      Dedup.dedupClusters(spark, dir)
-        .filter(col("is_keeper")).select(col("doc_id"))
-    }
-    val fLeakTrainDocs = Future {
-      Dedup.splitLeakage(spark, dir)
-        .select(col("train_doc").as("doc_id")).distinct()
-    }
-    val (nearKeep, leakTrainDocs) =
-      try {
-        (Await.result(fNearKeep, Duration.Inf),
-          Await.result(fLeakTrainDocs, Duration.Inf))
-      } finally ec.shutdown()
+    val Seq(nearKeep, leakTrainDocs) = inParallel(spark)(
+      () => Dedup.dedupClusters(spark, dir)
+        .filter(col("is_keeper")).select(col("doc_id")),
+      () => Dedup.splitLeakage(spark, dir)
+        .select(col("train_doc").as("doc_id")).distinct())
     val exactKeep = Dedup.exact(spark, dir)
       .select(col("keep_id").as("doc_id"))
     // the quality/language gates are ROW-LOCAL columns (the exact same
@@ -116,39 +138,29 @@ object Pipeline {
     // within-batch leakage join's sets/prefix checkpoints). Built
     // sequentially they serialize on the driver (guide §2.6: actions
     // are only sequential because driver code calls them sequentially)
-    // — a small pool overlaps them so the eager half costs the slowest
+    // — [[inParallel]] overlaps them so the eager half costs the slowest
     // branch, not the sum. The bidirectional containment probe stays
     // LAZY (single final-job evaluation overlaps the other stages at
     // full core count; an eager checkpoint here measured as a pure
     // 2-second barrier).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContextExecutorService =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val fNearHit = Future(Metrics.phase(spark, "increment.near_hit") {
-      val nearPairs = Dedup.probeMinhashIndex(spark, mhIndex, batchDocs)
-      nearPairs.select(col("doc_a").as("doc_id"))
-        .join(bIds, Seq("doc_id"), "left_semi")
-        .unionByName(nearPairs.select(col("doc_b").as("doc_id"))
-          .join(bIds, Seq("doc_id"), "left_semi"))
-        .distinct()
-        .localCheckpoint()
-    })
-    val fComps = Future(Metrics.phase(spark, "increment.components") {
-      Graph.connectedComponents(
-        Dedup.minhashPairsOf(batchDocs), "doc_a", "doc_b")
-    })
-    val fLeakWithin = Future(Metrics.phase(spark, "increment.leak_within") {
-      Dedup.splitLeakageOn(batchDocs, tau)
-        .select(col("train_doc").as("doc_id")).distinct()
-    })
-    val (nearHit, comps, leakWithin) =
-      try {
-        (Await.result(fNearHit, Duration.Inf),
-          Await.result(fComps, Duration.Inf),
-          Await.result(fLeakWithin, Duration.Inf))
-      } finally ec.shutdown()
+    val Seq(nearHit, comps, leakWithin) = inParallel(spark)(
+      () => Metrics.phase(spark, "increment.near_hit") {
+        val nearPairs = Dedup.probeMinhashIndex(spark, mhIndex, batchDocs)
+        nearPairs.select(col("doc_a").as("doc_id"))
+          .join(bIds, Seq("doc_id"), "left_semi")
+          .unionByName(nearPairs.select(col("doc_b").as("doc_id"))
+            .join(bIds, Seq("doc_id"), "left_semi"))
+          .distinct()
+          .localCheckpoint()
+      },
+      () => Metrics.phase(spark, "increment.components") {
+        Graph.connectedComponents(
+          Dedup.minhashPairsOf(batchDocs), "doc_a", "doc_b")
+      },
+      () => Metrics.phase(spark, "increment.leak_within") {
+        Dedup.splitLeakageOn(batchDocs, tau)
+          .select(col("train_doc").as("doc_id")).distinct()
+      })
     val bothDir = Dedup.probeContainmentBoth(spark, contIndex, batchDocs, tau)
     // corpus hits (exact + near) — each probe is O(batch)
     val corpusExact = Dedup.probeExactIndex(spark, mhIndex, batchDocs)

@@ -254,7 +254,13 @@ object Search {
     * stats relation gets one more (count, Σdl) segment. Appended doc
     * ids must be NEW (the standard immutable-corpus ingest contract —
     * postings are unique per (tok, doc), which is what lets probes
-    * derive df by counting matched postings). */
+    * derive df by counting matched postings). A batch a stream
+    * replays after its commit (`Streams.foreachBatchStream`) breaks
+    * that uniqueness: its postings count twice in df and its stats
+    * segment twice in n_docs, so scores drift until
+    * [[graft.sources.FormatIO.compactBucketedTable]] plus a distinct
+    * rewrite repairs the index, or batches are keyed idempotently
+    * upstream. */
   def appendToSearchIndex(spark: SparkSession, name: String,
       newDocs: DataFrame): Unit = {
     // three segment tables under ONE epoch commit (FormatIO index

@@ -1502,7 +1502,13 @@ object Similarity {
   /** DELTA APPEND into the IVF-PQ index: bucket under the frozen IVF
     * centroids, encode under the frozen PQ codebooks (append never
     * retrains — the [[appendToIvfIndex]] contract), postings and full
-    * vectors land in their own bucket layouts under one epoch. */
+    * vectors land in their own bucket layouts under one epoch. A wave
+    * a stream replays after its commit (`Streams.foreachBatchStream`)
+    * appends duplicate posting AND `_vecs` rows; [[probeIvfPqIndex]]
+    * drops them with an in-window lag() guard before BOTH rank cuts
+    * (duplicates sort adjacent), so a replay cannot consume k-slots or
+    * multiply the rerank join. The duplicates still occupy storage
+    * until the next retrain rewrites the generation. */
   def appendToIvfPqIndex(spark: SparkSession, name: String,
       batch: DataFrame): Unit = {
     val pin = graft.sources.FormatIO.committedEpoch(spark, name)

@@ -1115,7 +1115,11 @@ object TextAnalysis {
     * append-only rows and the df merge is exact integer arithmetic),
     * per-wave cost O(batch). Compose with
     * [[graft.sources.FormatIO.compactBucketedTable]] for file
-    * hygiene. */
+    * hygiene. Replay-safe by probe construction: when a stream replays
+    * a committed batch (`Streams.foreachBatchStream`), pair strength
+    * still counts DISTINCT fps (a duplicated posting can't inflate it)
+    * and duplicate df rows only push a fingerprint toward the cap —
+    * conservative exclusion, never phantom pairs. */
   def appendToWinnowIndex(spark: SparkSession, name: String,
       newDocs: DataFrame): Unit = {
     val meta = spark.table(s"${name}_meta").collect().head
@@ -1351,7 +1355,11 @@ object TextAnalysis {
     * `build(corpus ∪ batch)` (postings are append-only rows into the
     * same bucket layout; the df merge is exact integer addition),
     * per-wave cost O(batch). Appended ids must be new (the immutable-
-    * corpus ingest contract shared by every family). */
+    * corpus ingest contract shared by every family). A batch a stream
+    * replays after its commit (`Streams.foreachBatchStream`) inflates
+    * df counts like BM25's; existence (df > 0) stays correct, so probe
+    * results are replay-proof and only the counts need the compaction
+    * runbook. */
   def appendToLmIndex(spark: SparkSession, name: String,
       newDocs: DataFrame): Unit = {
     // postings + gramdf move under ONE epoch commit (FormatIO index
@@ -1677,9 +1685,12 @@ object TextAnalysis {
 
   /** Append a document batch into the persisted CMS sketch — one more
     * counter segment (depth read from `_meta` so a probe can never see
-    * mixed-depth segments). Replay caution: a re-delivered batch
-    * inflates counts (the estimate stays an upper bound — the
-    * one-sided error law survives at-least-once delivery). */
+    * mixed-depth segments). CMS additivity makes streamed growth
+    * EXACTLY equal a batch rebuild on the union (cell-equal,
+    * spec-proved). The sketch stages no index epoch, so every batch a
+    * stream re-delivers (`Streams.foreachBatchStream`) inflates counts;
+    * the estimate stays an upper bound — the one-sided error law
+    * survives at-least-once delivery. */
   def appendToCmsSketch(spark: SparkSession, name: String,
       newDocs: DataFrame): Unit = {
     val depth = spark.table(s"${name}_meta").collect().head.getInt(0)

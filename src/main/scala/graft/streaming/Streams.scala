@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 import java.sql.Timestamp
 
 /** Structured Streaming topologies (SURVEY §2d) — the streaming twins of
@@ -265,56 +265,21 @@ object Streams {
 
   /** Streaming upsert sink — the foreachBatch MERGE pattern without a
     * lakehouse format: each micro-batch reduces to one latest row per
-    * key, merges with the existing parquet snapshot (old ∪ new →
-    * keyed argmax), and promotes the result via staging + rename so a
-    * complete snapshot copy exists on disk at every instant:
-    *
-    *   write merged → `<path>.staging` (reads the live snapshot — a
-    *   different path, so the write never races its own input and no
-    *   copy needs to live only in executor memory), then swap:
-    *   snapshot → `<path>.backup`, staging → snapshot, drop backup.
-    *
-    * A crash at any point leaves a full copy at snapshot, staging, or
-    * backup; the next batch finishes the interrupted swap before
-    * reading. Only a genuinely-absent first-batch snapshot is treated
-    * as empty — any other read failure (permissions, transient FS
-    * errors, corrupt footers) propagates and fails the batch rather
-    * than silently discarding accumulated state. Idempotent per batch:
-    * a replayed batch re-derives the same snapshot, which is what makes
+    * key and merges with the existing parquet snapshot (old ∪ new →
+    * keyed argmax), published through [[swapSnapshot]]. Only a
+    * genuinely-absent first-batch snapshot is treated as empty — any
+    * other read failure (permissions, transient FS errors, corrupt
+    * footers) propagates and fails the batch rather than silently
+    * discarding accumulated state. Idempotent per batch: a replayed
+    * batch re-derives the same snapshot, which is what makes
     * foreachBatch exactly-once at the sink. Snapshot size = key
     * cardinality, not stream length. */
   def upsertSink(events: DataFrame, snapshotPath: String,
-      checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
+      checkpointPath: String): StreamingQuery =
     events.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        import org.apache.hadoop.fs.Path
-        val snap = new Path(snapshotPath)
-        val staging = new Path(snapshotPath + ".staging")
-        val backup = new Path(snapshotPath + ".backup")
-        val fs = snap.getFileSystem(sp.sparkContext.hadoopConfiguration)
-        // Hadoop FileSystem.rename/delete signal failure by RETURNING
-        // false, not throwing — an unchecked false here would let the
-        // batch "succeed" without publishing the merged snapshot. Fail
-        // the batch instead so the engine retries it.
-        def renameOrFail(from: Path, to: Path): Unit =
-          require(fs.rename(from, to), s"rename $from -> $to failed")
-        def deleteOrFail(p: Path): Unit =
-          require(fs.delete(p, true), s"delete $p failed")
-        // Finish an interrupted swap: staging (newest) wins over backup.
-        // recovery: staging is only trustworthy if its write COMMITTED —
-        // the parquet job's _SUCCESS marker is the commit point. A crash
-        // mid-write (first batch especially, when no snapshot exists to
-        // fall back to) leaves a partial staging dir; promoting it would
-        // wedge every later batch on an unreadable snapshot, so partial
-        // staging is deleted and the batch replay re-derives it instead.
-        val stagingCommitted = fs.exists(staging) &&
-          fs.exists(new Path(staging, "_SUCCESS"))
-        if (fs.exists(staging) && !stagingCommitted) deleteOrFail(staging)
-        if (!fs.exists(snap) && stagingCommitted) renameOrFail(staging, snap)
-        if (!fs.exists(snap) && fs.exists(backup)) renameOrFail(backup, snap)
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy(col("user_id"))
           .orderBy(col("ts").desc, col("event_id").desc)
@@ -323,19 +288,51 @@ object Streams {
           .filter(col("_rn") === 1).drop("_rn")
         val batchLatest = latestOf(batch
           .select(col("user_id"), col("ts"), col("event_id"), col("event_type")))
-        // Missing path = first batch → empty; every other failure rethrows.
-        val old =
-          if (fs.exists(snap)) sp.read.parquet(snapshotPath)
-          else batchLatest.limit(0)
-        latestOf(old.unionByName(batchLatest))
-          .write.mode("overwrite").parquet(staging.toString)
-        if (fs.exists(backup)) deleteOrFail(backup)
-        if (fs.exists(snap)) renameOrFail(snap, backup)
-        renameOrFail(staging, snap)
-        if (fs.exists(backup)) deleteOrFail(backup)
-        ()
+        swapSnapshot(batch.sparkSession, snapshotPath)(old =>
+          latestOf(old.fold(batchLatest)(_.unionByName(batchLatest))))
       }
       .start()
+
+  /** Replace the parquet snapshot at `path` with `next(current)`
+    * (`current` is None before the first write), keeping a complete
+    * copy on disk at every instant: write `next` to `<path>.staging`
+    * (never over the snapshot it reads), then swap snapshot →
+    * `<path>.backup`, staging → snapshot, and drop the backup. A crash
+    * at any point leaves a full copy at snapshot, staging or backup,
+    * and the next call finishes the interrupted swap before reading.
+    * Staging counts only if its write COMMITTED (the parquet job's
+    * `_SUCCESS` marker): a crash mid-write, e.g. in the first batch
+    * with no snapshot to fall back to, leaves a partial staging dir
+    * that would wedge every later batch if promoted, so it is deleted
+    * and the batch replay re-derives it. */
+  private def swapSnapshot(spark: SparkSession, path: String)(
+      next: Option[DataFrame] => DataFrame): Unit = {
+    import org.apache.hadoop.fs.Path
+    val snap = new Path(path)
+    val staging = new Path(path + ".staging")
+    val backup = new Path(path + ".backup")
+    val fs = snap.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // Hadoop FileSystem.rename/delete signal failure by RETURNING
+    // false, not throwing — an unchecked false here would let the
+    // batch "succeed" without publishing the new snapshot. Fail the
+    // batch instead so the engine retries it.
+    def renameOrFail(from: Path, to: Path): Unit =
+      require(fs.rename(from, to), s"rename $from -> $to failed")
+    def deleteOrFail(p: Path): Unit =
+      require(fs.delete(p, true), s"delete $p failed")
+    // finish an interrupted swap: committed staging (newest) wins over
+    // backup
+    val stagingCommitted = fs.exists(new Path(staging, "_SUCCESS"))
+    if (fs.exists(staging) && !stagingCommitted) deleteOrFail(staging)
+    if (!fs.exists(snap) && stagingCommitted) renameOrFail(staging, snap)
+    if (!fs.exists(snap) && fs.exists(backup)) renameOrFail(backup, snap)
+    next(if (fs.exists(snap)) Some(spark.read.parquet(path)) else None)
+      .write.mode("overwrite").parquet(staging.toString)
+    if (fs.exists(backup)) deleteOrFail(backup)
+    if (fs.exists(snap)) renameOrFail(snap, backup)
+    renameOrFail(staging, snap)
+    if (fs.exists(backup)) deleteOrFail(backup)
+  }
 
   case class Doc(doc_id: Long, ts: Timestamp, text: String)
   case class DocVerdict(doc_id: Long, fingerprint: Long, is_dup: Boolean)
@@ -366,15 +363,22 @@ object Streams {
     }
   }
 
-  /** Streaming near-identical suppression on content fingerprint. */
+  /** Streaming near-identical suppression on content fingerprint.
+    *
+    * A TTL'd query never goes idle: TTL state requires
+    * `TimeMode.ProcessingTime()` (Spark rejects it otherwise with
+    * `STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL`), and in
+    * that mode `transformWithState` always asks for another batch, so
+    * the query runs one no-data micro-batch per trigger and
+    * `processAllAvailable` never returns on it — read its sink with a
+    * deadline instead. With `ttl = null` the state is unbounded, the
+    * query runs in `TimeMode.None()` and quiesces like any other. */
   def fingerprintDedupStream(spark: SparkSession, docs: Dataset[Doc],
       ttl: java.time.Duration = java.time.Duration.ofHours(24)): Dataset[DocVerdict] = {
     import spark.implicits._
     import org.apache.spark.unsafe.types.UTF8String
-    // ProcessingTime mode is required whenever a TTL is set (it is the
-    // TTL clock); with ttl=null the state is unbounded and TimeMode.None
-    // suffices. Update output: each verdict is final on arrival — no
-    // watermark to wait on before emitting.
+    // Update output: each verdict is final on arrival — no watermark to
+    // wait on before emitting.
     val timeMode = if (ttl == null) TimeMode.None() else TimeMode.ProcessingTime()
     docs.groupByKey(d => graft.functions.ExprRuntime.simhash64(
         UTF8String.fromString(d.text.toLowerCase.trim.replaceAll("\\s+", " "))))
@@ -1081,51 +1085,47 @@ object Streams {
         TimeMode.None(), OutputMode.Update())
   }
 
-  /** Streaming near-dup detection against the PERSISTED MinHash band
-    * index ([[graft.operators.Dedup.buildMinhashIndex]]): each
-    * micro-batch of arriving documents probes the bucketed corpus
-    * index via `foreachBatch` and appends its candidate pairs to
-    * `outPath` — the streaming face of "dedup the new crawl against
-    * the corpus at O(batch) cost". The index side never reshuffles
-    * (bucket layout; proved by the batch metrics spec); per-batch cost
-    * scales with the batch. Complements [[minhashIndexStream]] (pure
-    * in-state index for self-contained streams) by checking arrivals
-    * against an EXISTING corpus. */
-  def indexProbeStream(spark: SparkSession, docs: DataFrame,
-      indexName: String, outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
+  /** Run `body` on every micro-batch of `rows` — the one path that
+    * keeps a persisted index current under a stream of arrivals:
+    * `foreachBatchStream(docs, ckpt)((b, _) =>
+    * Dedup.appendToMinhashIndex(spark, idx, b))` appends each wave and
+    * [[probeStream]] probes with it. A wave costs O(batch), and
+    * `stream appends then probe ≡ batch rebuild then probe`
+    * (spec-proved per family). `batchId` counts micro-batches from 0
+    * and repeats on a replay.
+    *
+    * Delivery is at-least-once: a batch the query has not recorded in
+    * `checkpoint` when it dies runs again after the restart.
+    *  - every index `appendToX` stages its wave through
+    *    [[graft.sources.FormatIO.stageIndexEpoch]]: a wave that dies
+    *    before its `epoch-E` marker leaves rows no probe reads, and the
+    *    retry scrubs them before it reuses E;
+    *  - a crash after the marker, but before the stream commits the
+    *    batch, replays the batch as a new epoch: the index holds it
+    *    twice. Probes dedup or verify candidates; each `appendToX`
+    *    says what a double append still changes (the CMS sketch stages
+    *    no epoch at all);
+    *  - parquet a batch writes (probe rows, curated rows) is appended
+    *    again on replay. */
+  def foreachBatchStream(rows: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    rows.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Dedup.probeMinhashIndex(spark, indexName, batch)
-          .write.mode("append").parquet(outPath)
-      }
+      .foreachBatch(body)
       .start()
 
-  /** Streaming containment screening against the PERSISTED containment
-    * index ([[graft.operators.Dedup.buildContainmentIndex]]): each
-    * micro-batch of arriving documents asks "is this document mostly
-    * CONTAINED in the existing corpus" (directed C(arrival→corpus) ≥ τ)
-    * — the streaming face of eval-set decontamination and quote/excerpt
-    * screening at ingest time, where symmetric near-dup probes
-    * ([[indexProbeStream]]) miss short excerpts of long corpus pages.
-    * Same shape as the MinHash probe: the bucketed posting/verify
-    * tables never reshuffle, per-batch cost scales with the batch. */
-  def containmentProbeStream(spark: SparkSession, docs: DataFrame,
-      indexName: String, outPath: String, checkpoint: String,
-      tau: Double = 0.6): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Dedup.probeContainmentIndex(spark, indexName, batch, tau)
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
+  /** [[foreachBatchStream]] that appends `probe(batch)` to `outPath` as
+    * parquet — `probeStream(docs, out, ckpt)(Dedup.probeMinhashIndex(
+    * spark, idx, _))`. */
+  def probeStream(rows: DataFrame, outPath: String, checkpoint: String)(
+      probe: DataFrame => DataFrame): StreamingQuery =
+    foreachBatchStream(rows, checkpoint)((batch, _) =>
+      probe(batch).write.mode("append").parquet(outPath))
 
   /** Streaming COMPONENT-LABEL maintenance — the label-level completion
-    * of the streaming dedup story: [[indexProbeStream]] turns arriving
-    * docs into candidate PAIRS; this stream folds an edge stream into a
-    * persistent (id, component) labels snapshot via
+    * of the streaming dedup story: a MinHash [[probeStream]] turns
+    * arriving docs into candidate PAIRS; this stream folds an edge
+    * stream into a persistent (id, component) labels snapshot via
     * `Graph.incrementalComponents`, so "which duplicate GROUP is this
     * doc in" is answerable at any instant without a full recompute.
     *
@@ -1139,57 +1139,21 @@ object Streams {
     * the batch's edges), untouched components pass through unread —
     * the same math as the batch ingest path, driven by the stream.
     *
-    * The labels snapshot uses the [[upsertSink]] staging+swap protocol
-    * (a complete copy exists on disk at every instant; interrupted
-    * swaps self-heal; replayed batches re-derive the same snapshot, so
-    * the sink stays idempotent). */
+    * The labels snapshot is published through [[swapSnapshot]], so a
+    * replayed batch re-derives the same snapshot and the sink stays
+    * idempotent. */
   def componentStream(edges: DataFrame, labelsPath: String,
       checkpointPath: String, srcCol: String = "src", dstCol: String = "dst")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    edges.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        import org.apache.hadoop.fs.Path
-        val snap = new Path(labelsPath)
-        val staging = new Path(labelsPath + ".staging")
-        val backup = new Path(labelsPath + ".backup")
-        val fs = snap.getFileSystem(sp.sparkContext.hadoopConfiguration)
-        def renameOrFail(from: Path, to: Path): Unit =
-          require(fs.rename(from, to), s"rename $from -> $to failed")
-        def deleteOrFail(p: Path): Unit =
-          require(fs.delete(p, true), s"delete $p failed")
-        // recovery: staging is only trustworthy if its write COMMITTED —
-        // the parquet job's _SUCCESS marker is the commit point. A crash
-        // mid-write (first batch especially, when no snapshot exists to
-        // fall back to) leaves a partial staging dir; promoting it would
-        // wedge every later batch on an unreadable snapshot, so partial
-        // staging is deleted and the batch replay re-derives it instead.
-        val stagingCommitted = fs.exists(staging) &&
-          fs.exists(new Path(staging, "_SUCCESS"))
-        if (fs.exists(staging) && !stagingCommitted) deleteOrFail(staging)
-        if (!fs.exists(snap) && stagingCommitted) renameOrFail(staging, snap)
-        if (!fs.exists(snap) && fs.exists(backup)) renameOrFail(backup, snap)
-        val old =
-          if (fs.exists(snap)) sp.read.parquet(labelsPath)
-          else sp.createDataFrame(
+      : StreamingQuery =
+    foreachBatchStream(edges, checkpointPath) { (batch, _) =>
+      val sp = batch.sparkSession
+      swapSnapshot(sp, labelsPath)(old => graft.operators.Graph
+        .incrementalComponents(old.getOrElse(sp.createDataFrame(
             sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("id",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("component",
-                org.apache.spark.sql.types.LongType))))
-        graft.operators.Graph
-          .incrementalComponents(old, batch, srcCol, dstCol)
-          .write.mode("overwrite").parquet(staging.toString)
-        if (fs.exists(backup)) deleteOrFail(backup)
-        if (fs.exists(snap)) renameOrFail(snap, backup)
-        renameOrFail(staging, snap)
-        if (fs.exists(backup)) deleteOrFail(backup)
-        ()
-      }
-      .start()
+            org.apache.spark.sql.types.StructType.fromDDL(
+              "id BIGINT, component BIGINT"))),
+          batch, srcCol, dstCol))
+    }
 
   /** Read a streaming query's STATE STORE as a batch DataFrame (the
     * Spark 4 `statestore` data source): (key, value, partition_id)
@@ -1210,248 +1174,6 @@ object Streams {
     r.load(checkpoint)
   }
 
-  /** Streaming keyword search against the PERSISTED BM25 index
-    * ([[graft.operators.Search.buildSearchIndex]]): each micro-batch
-    * of arriving queries (query_id, tok rows) probes the bucketed
-    * postings and appends its per-query top-N — "search the corpus as
-    * queries arrive" with per-wave cost scaling in the batch's match
-    * volume, the corpus never reshuffling. Same foreachBatch shape as
-    * the MinHash/containment index probes. */
-  def searchProbeStream(spark: SparkSession, queries: DataFrame,
-      indexName: String, outPath: String, checkpoint: String,
-      topN: Int = 20): org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Search.probeSearchIndexMany(spark, indexName,
-            batch, topN)
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
-
-  /** Streaming fuzzy-key screening against the PERSISTED edit index
-    * ([[graft.operators.Dedup.buildEditIndex]]): each micro-batch of
-    * arriving (probe_key, probe_name) rows asks "which registry
-    * entries is this within τ edits of" — the persisted-corpus
-    * complement of [[editIndexStream]]'s recency-bounded state flavor
-    * (full entity registry vs recent arrivals); per-wave cost scales
-    * with the batch's deletion-variant fan-out, the variant-bucketed
-    * postings never reshuffle. */
-  def editProbeStream(spark: SparkSession, probes: DataFrame,
-      indexName: String, outPath: String, checkpoint: String,
-      tau: Int = 1): org.apache.spark.sql.streaming.StreamingQuery =
-    probes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Dedup.probeEditIndex(spark, indexName, batch, tau)
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
-
-  /** Streaming ANN against the PERSISTED IVF index
-    * ([[graft.operators.Similarity.buildIvfIndex]]): each micro-batch
-    * of arriving query vectors (vec_id, v: array<double>, raw —
-    * normalization happens in the probe) fans out to its nProbe
-    * nearest lists and appends per-query top-k — the fourth index
-    * family probe-able from a stream (MinHash, containment, BM25,
-    * IVF), same foreachBatch shape, corpus postings never reshuffle. */
-  def ivfProbeStream(spark: SparkSession, queries: DataFrame,
-      indexName: String, outPath: String, checkpoint: String,
-      k: Int = 3, nProbe: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Similarity.probeIvfIndexOn(spark, indexName,
-            batch, k, nProbe)
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
-
-  /** Streaming near-dup screening against the PERSISTED winnow
-    * fingerprint index
-    * ([[graft.operators.TextAnalysis.buildWinnowIndex]]): each
-    * micro-batch of arriving documents appends its directed
-    * shared-fingerprint pairs — the sixth index family probe-able from
-    * a stream, same foreachBatch shape, the bucketed fp postings never
-    * reshuffle and the df cap comes from the index's own `_meta`. */
-  def winnowProbeStream(spark: SparkSession, docs: DataFrame,
-      indexName: String, outPath: String, checkpoint: String,
-      minShared: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.TextAnalysis.probeWinnowIndex(spark, indexName,
-            batch, minShared)
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
-
-  /** Streaming index APPEND — the ingest half of the persisted-index
-    * story, closing the loop the probe streams left open: before this,
-    * streams could only PROBE a persisted index (or hold
-    * recency-bounded state), so growing the corpus index still meant a
-    * batch full rebuild. Each micro-batch appends into the index's own
-    * bucketed layout via the family's `appendToXIndex` (O(batch) per
-    * wave, bucket placement identical to a rebuild's — the batch
-    * parity specs), so `stream appends then probe ≡ batch rebuild then
-    * probe` (spec-proved). Exactly-once caveat, stated not hidden:
-    * `foreachBatch` into a parquet APPEND is at-least-once on restart
-    * after a mid-batch crash (the same contract as every probe stream
-    * above); duplicated postings widen candidate sets but every family
-    * dedups/verifies candidates, so probe RESULTS stay correct except
-    * BM25's df-by-counting — run
-    * [[graft.sources.FormatIO.compactBucketedTable]] + a distinct
-    * rewrite in the recovery runbook, or key batches idempotently
-    * upstream. */
-  def minhashAppendStream(spark: SparkSession, docs: DataFrame,
-      indexName: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Dedup.appendToMinhashIndex(spark, indexName, batch)
-      }
-      .start()
-
-  /** Streaming append into the persisted containment index — see
-    * [[minhashAppendStream]] for the shared contract. */
-  def containmentAppendStream(spark: SparkSession, docs: DataFrame,
-      indexName: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Dedup.appendToContainmentIndex(spark, indexName, batch)
-      }
-      .start()
-
-  /** Streaming append into the persisted BM25 index — see
-    * [[minhashAppendStream]] for the shared contract. */
-  def searchAppendStream(spark: SparkSession, docs: DataFrame,
-      indexName: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Search.appendToSearchIndex(spark, indexName, batch)
-      }
-      .start()
-
-  /** Streaming append into the persisted edit index (rows: key, name)
-    * — see [[minhashAppendStream]] for the shared contract. */
-  def editAppendStream(spark: SparkSession, rows: DataFrame,
-      indexName: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Dedup.appendToEditIndex(spark, indexName, batch)
-      }
-      .start()
-
-  /** Streaming append into the persisted winnow fingerprint index —
-    * see [[minhashAppendStream]] for the shared contract. Replay-safe
-    * by probe construction: pair strength counts DISTINCT fps (a
-    * duplicated posting can't inflate it) and duplicate df rows only
-    * push a fingerprint toward the cap — conservative exclusion,
-    * never phantom pairs. */
-  def winnowAppendStream(spark: SparkSession, docs: DataFrame,
-      indexName: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.TextAnalysis.appendToWinnowIndex(spark, indexName,
-          batch)
-      }
-      .start()
-
-  /** Streaming append into the persisted pHash band index (rows:
-    * doc_id, phash) — the eighth family's ingest half; see
-    * [[minhashAppendStream]] for the shared contract. Replay-safe by
-    * probe construction: a duplicated band row cannot create a phantom
-    * pair (pairs are distinct-ed and Hamming-verified against the full
-    * 64-bit hash). */
-  def phashAppendStream(spark: SparkSession, hashes: DataFrame,
-      indexName: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    hashes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Multimodal.appendToPhashIndex(spark, indexName, batch)
-      }
-      .start()
-
-  /** Streaming media near-dup screening against the PERSISTED pHash
-    * band index: each micro-batch of arriving (doc_id, phash) rows
-    * appends its Hamming ≤ r pairs against the pinned corpus — the
-    * media twin of [[winnowProbeStream]], O(batch) per wave. */
-  def phashProbeStream(spark: SparkSession, hashes: DataFrame,
-      indexName: String, outPath: String, checkpoint: String,
-      r: Int = 3): org.apache.spark.sql.streaming.StreamingQuery =
-    hashes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Multimodal.probePhashIndex(spark, indexName,
-            batch, r)
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
-
-  /** Streaming LM-coverage scoring against the PERSISTED n-gram LM
-    * index ([[graft.operators.TextAnalysis.buildLmIndex]]): each
-    * micro-batch of arriving documents gets its stupid-backoff
-    * resolution profile (which model order each trigram position
-    * resolves at) — the streaming form of perplexity-style quality
-    * gating. Per-wave cost O(batch grams): the probe's df merge
-    * semi-joins the batch's gram set below the log-segment sum, the
-    * bucketed postings never reshuffle. */
-  def lmProbeStream(spark: SparkSession, docs: DataFrame,
-      indexName: String, outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.TextAnalysis.probeLmIndex(spark, indexName, batch)
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
-
-  /** Streaming append into the persisted n-gram LM index — see
-    * [[minhashAppendStream]] for the shared contract. Replay caution
-    * is df-shaped like BM25's: a replayed append inflates df counts
-    * (existence — df > 0 — stays correct, so probe results are
-    * replay-proof; only the counts need the compaction runbook). */
-  def lmAppendStream(spark: SparkSession, docs: DataFrame,
-      indexName: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.TextAnalysis.appendToLmIndex(spark, indexName,
-          batch)
-      }
-      .start()
-
-  /** Streaming append into the persisted CMS sketch
-    * ([[graft.operators.TextAnalysis.buildCmsSketch]]): each
-    * micro-batch contributes one depth·256-row counter segment —
-    * CMS additivity makes streamed growth EXACTLY equal a batch
-    * rebuild on the union (spec-proved), the strongest parity of the
-    * append streams (the index families are probe-equal; the sketch
-    * is cell-equal). At-least-once replay keeps estimates upper
-    * bounds (one-sided error survives re-delivery). */
-  def cmsAppendStream(spark: SparkSession, docs: DataFrame,
-      sketchName: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.TextAnalysis.appendToCmsSketch(spark, sketchName,
-          batch)
-      }
-      .start()
-
   /** THE FULL INGEST LOOP as one stream — the topology the index
     * append/probe machinery exists for: each micro-batch of arriving
     * documents is CURATED against the current corpus
@@ -1465,87 +1187,28 @@ object Streams {
     * future doc duplicating a DROPPED doc but not its kept twin slips
     * through — is the standard curated-corpus contract). The curation
     * result is materialized BEFORE the appends so a batch can never
-    * probe index rows it is itself writing. Same at-least-once restart
-    * caveat as [[minhashAppendStream]]. */
+    * probe index rows it is itself writing. Replays follow
+    * [[foreachBatchStream]]. */
   def curationIncrementStream(spark: SparkSession, docs: DataFrame,
       mhIndex: String, contIndex: String, outPath: String,
-      checkpoint: String, minQuality: Double = 0.3)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // ONE materialized copy of the micro-batch: a foreachBatch
-        // frame is not reliably re-scannable after its first action
-        // (a second evaluation can come back empty), and a silently
-        // empty survivor append here would freeze the corpus — every
-        // later wave would curate against a stale index
-        val docsB = batch.select(col("doc_id"), col("text")).localCheckpoint()
-        val curated = graft.operators.Pipeline
-          .curateIncrement(spark, mhIndex, contIndex, docsB, minQuality)
-          .localCheckpoint()
-        curated.write.mode("append").parquet(outPath)
-        val survivors = docsB
-          .join(curated.select(col("doc_id")), Seq("doc_id"), "left_semi")
-        graft.operators.Dedup.appendToMinhashIndex(spark, mhIndex, survivors)
-        graft.operators.Dedup.appendToContainmentIndex(spark, contIndex,
-          survivors)
-      }
-      .start()
-
-  /** Streaming append into the persisted IVF index (rows: vec_id, v) —
-    * frozen-codebook assignment, see [[minhashAppendStream]] for the
-    * shared contract. */
-  def ivfAppendStream(spark: SparkSession, vectors: DataFrame,
-      indexName: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Similarity.appendToIvfIndex(spark, indexName, batch)
-      }
-      .start()
-
-  /** Streaming append into the persisted IVF-PQ index (rows: vec_id,
-    * v) — the TENTH family's ingest half: frozen IVF centroids place
-    * the bucket, frozen PQ codebooks encode the codes, the full vector
-    * lands in the `_vecs` rerank side table; all row-local against
-    * broadcast codebooks, O(batch) per wave. See
-    * [[minhashAppendStream]] for the shared at-least-once contract.
-    * Replay safety: a replayed wave appends duplicate posting AND
-    * `_vecs` rows; `probeIvfPqIndex` drops them with an in-window
-    * lag() guard before BOTH rank cuts (duplicates sort adjacent), so
-    * a replay cannot consume k-slots or multiply the rerank join —
-    * the duplicates still occupy storage until the next retrain
-    * rewrites the generation (same compaction runbook as the BM25/LM
-    * append streams). */
-  def ivfPqAppendStream(spark: SparkSession, vectors: DataFrame,
-      indexName: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Similarity.appendToIvfPqIndex(spark, indexName,
-          batch)
-      }
-      .start()
-
-  /** Streaming ANN against the PERSISTED IVF-PQ index: each
-    * micro-batch of query vectors scores its nProbe lists by ADC and
-    * appends per-query top-k (exact-reranked when `rerank > 0`) — the
-    * compressed-family twin of [[ivfProbeStream]], same foreachBatch
-    * shape, code postings never reshuffle. */
-  def ivfPqProbeStream(spark: SparkSession, queries: DataFrame,
-      indexName: String, outPath: String, checkpoint: String,
-      k: Int = 3, nProbe: Int = 8, rerank: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Similarity.probeIvfPqIndex(spark, indexName,
-            batch, k, nProbe, rerank)
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
+      checkpoint: String, minQuality: Double = 0.3): StreamingQuery =
+    foreachBatchStream(docs, checkpoint) { (batch, _) =>
+      // ONE materialized copy of the micro-batch: a foreachBatch
+      // frame is not reliably re-scannable after its first action
+      // (a second evaluation can come back empty), and a silently
+      // empty survivor append here would freeze the corpus — every
+      // later wave would curate against a stale index
+      val docsB = batch.select(col("doc_id"), col("text")).localCheckpoint()
+      val curated = graft.operators.Pipeline
+        .curateIncrement(spark, mhIndex, contIndex, docsB, minQuality)
+        .localCheckpoint()
+      curated.write.mode("append").parquet(outPath)
+      val survivors = docsB
+        .join(curated.select(col("doc_id")), Seq("doc_id"), "left_semi")
+      graft.operators.Dedup.appendToMinhashIndex(spark, mhIndex, survivors)
+      graft.operators.Dedup.appendToContainmentIndex(spark, contIndex,
+        survivors)
+    }
 
   case class ViewPtr(view_id: Long, view_ts: Timestamp)
   case class AsOfMatch(event_id: Long, user_id: Long, ts: Timestamp,
@@ -1684,39 +1347,16 @@ object Streams {
     * one broadcast of the reference counts. */
   def tvDriftMonitorStream(spark: SparkSession, docs: DataFrame,
       refCounts: DataFrame, outTable: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val counts = batch
-          .select(explode(split(lower(trim(col("text"))), "\\s+"))
-            .as("tok"))
-          .groupBy(col("tok")).agg(count(lit(1)).as("c"))
-        graft.operators.Quality.tvDistance(refCounts, counts)
-          .withColumn("batch_id", lit(batchId))
-          .write.format("parquet").mode("append").saveAsTable(outTable)
-      }
-      .start()
-
-  /** STREAMED SNAPSHOT COMMITS: every micro-batch lands as one atomic
-    * [[graft.sources.FormatIO.appendSnapshot]] version — the ingest
-    * sink that gives concurrent readers the snapshot guarantee (a
-    * reader pinned mid-batch sees the previous complete version, never
-    * a half-written directory) while keeping time travel per batch.
-    * foreachBatch is at-least-once on restart, same caveat as
-    * [[minhashAppendStream]]; replayed batches surface as extra
-    * versions, and the parity spec reads the LATEST version against a
-    * one-shot batch write. */
-  def snapshotAppendStream(spark: SparkSession, docs: DataFrame,
-      tablePath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.FormatIO.appendSnapshot(spark, batch, tablePath)
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    foreachBatchStream(docs, checkpoint) { (batch, batchId) =>
+      val counts = batch
+        .select(explode(split(lower(trim(col("text"))), "\\s+"))
+          .as("tok"))
+        .groupBy(col("tok")).agg(count(lit(1)).as("c"))
+      graft.operators.Quality.tvDistance(refCounts, counts)
+        .withColumn("batch_id", lit(batchId))
+        .write.format("parquet").mode("append").saveAsTable(outTable)
+    }
 
   case class LangDoc(doc_id: Long, lang: String, text: String)
   case class ReservoirEntry(es_key: Double, doc_id: Long, n_tokens: Long)

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dedup, Pipeline}
 import graft.streaming.Streams
 import graft.sources.Tables
+import scala.jdk.CollectionConverters._
 
 /** The round-7 capstone law: curating ONE ARRIVING BATCH against the
   * persisted corpus indexes at O(batch) cost produces EXACTLY what the
@@ -157,5 +158,46 @@ class IncrementalCurationSpec extends AnyFunSuite {
     assert(streamed == (ref1 ++ ref2),
       s"streamed loop diverged: only-stream=${(streamed -- (ref1 ++ ref2)).take(5)} " +
         s"only-ref=${((ref1 ++ ref2) -- streamed).take(5)}")
+  }
+
+  test("pooled branches: a branch that throws cancels its sibling's " +
+    "running job, and its own exception surfaces") {
+    val sc = spark.sparkContext
+    val sibling = new java.util.concurrent.CountDownLatch(1)
+    val siblingJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty(
+            Metrics.JobDescription))).contains("test.sibling")) {
+          siblingJobs.add(e.jobId)
+          sibling.countDown()
+        }
+    }
+    val boom = new IllegalStateException("branch failed at once")
+    sc.addSparkListener(l)
+    try {
+      val thrown = intercept[IllegalStateException] {
+        Pipeline.inParallel(spark)(
+          // throws as soon as the sibling's job is running
+          () => { sibling.await(60, java.util.concurrent.TimeUnit.SECONDS); throw boom },
+          // a two-minute job unless its tasks are killed
+          () => Metrics.phase(spark, "test.sibling") {
+            sc.parallelize(1 to 2, 2).map { i =>
+              val tc = org.apache.spark.TaskContext.get()
+              val end = System.currentTimeMillis() + 120000
+              while (!tc.isInterrupted() && System.currentTimeMillis() < end)
+                Thread.sleep(20)
+              i
+            }.count()
+          })
+      }
+      assert(thrown eq boom, s"the failing branch's exception must surface: $thrown")
+      org.apache.spark.graft.BusDrain.drain(sc)
+      assert(!siblingJobs.isEmpty, "the sibling branch never started its job")
+      val active = sc.statusTracker.getActiveJobIds().toSet
+      assert(active.intersect(siblingJobs.asScala).isEmpty,
+        s"sibling jobs still running after the failure: $active")
+    } finally sc.removeSparkListener(l)
   }
 }

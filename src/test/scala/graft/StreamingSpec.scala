@@ -261,6 +261,40 @@ class StreamingSpec extends AnyFunSuite {
     assert(sp.read.parquet(snap).count() == 2)
   }
 
+  test("upsert snapshot recovery: a partial staging dir (no _SUCCESS " +
+    "commit marker) is discarded, not promoted to the live snapshot") {
+    val sp = spark
+    import sp.implicits._
+    implicit val sqlCtx = sp.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("graft-snap-rec").toString
+    val snap = base + "/s"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-snap-rec-ck").toString
+    // simulate a crash mid-write of the very first batch: a staging dir
+    // exists with parquet debris but no _SUCCESS marker, and no live
+    // snapshot to fall back to
+    assert(new java.io.File(snap + ".staging").mkdirs())
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(snap + ".staging/part-00000.parquet"),
+      Array[Byte](1, 2, 3)) // truncated garbage, unreadable as parquet
+    val input = MemoryStream[Event]
+    val q = Streams.upsertSink(input.toDS().toDF(), snap, ckpt)
+    input.addData(
+      Event(1, ts(1), 10, "signup", 0.0),
+      Event(2, ts(2), 20, "view", 1.0),
+      Event(3, ts(5), 10, "purchase", 9.0))
+    q.processAllAvailable()
+    q.stop()
+    // the stream self-healed: garbage staging was deleted (not renamed
+    // over the snapshot) and the batch derived the right snapshot
+    val got = sp.read.parquet(snap)
+      .collect().map(r => r.getAs[Long]("user_id") -> r.getAs[String]("event_type"))
+      .toMap
+    assert(got == Map(10L -> "purchase", 20L -> "view"),
+      s"recovery produced the wrong snapshot: $got")
+    assert(!new java.io.File(snap + ".staging").exists(),
+      "the staging dir must not survive a completed swap")
+  }
+
   test("streaming fingerprint dedup: first doc kept, later content " +
     "duplicates flagged across micro-batches") {
     val sp = spark
@@ -289,9 +323,10 @@ class StreamingSpec extends AnyFunSuite {
       assert(out == Map(1L -> false, 2L -> false, 3L -> true,
         4L -> true, 5L -> false),
         s"unexpected verdicts: $out")
-      // TTL path smoke: with a TTL the query runs in ProcessingTime mode,
-      // whose timers keep scheduling micro-batches — processAllAvailable
-      // never quiesces, so poll the sink with a deadline instead
+      // TTL path smoke: a TTL needs ProcessingTime mode, in which
+      // transformWithState asks for another batch on every trigger (a
+      // no-data micro-batch each time) — processAllAvailable never
+      // returns, so poll the sink with a deadline instead
       val input2 = MemoryStream[Streams.Doc]
       val q2 = Streams.fingerprintDedupStream(sp, input2.toDS(),
         ttl = java.time.Duration.ofHours(1))
@@ -691,8 +726,8 @@ class StreamingSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("graft-probe-out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-probe-ck").toString
     val input = MemoryStream[(Long, String)]
-    val q = Streams.indexProbeStream(sp,
-      input.toDF().toDF("doc_id", "text"), "mh_stream_idx", out, ckpt)
+    val q = Streams.probeStream(input.toDF().toDF("doc_id", "text"), out,
+      ckpt)(graft.operators.Dedup.probeMinhashIndex(sp, "mh_stream_idx", _))
     arrivals.grouped(15).foreach { chunk =>
       input.addData(chunk.toIndexedSeq)
       q.processAllAvailable()
@@ -722,8 +757,9 @@ class StreamingSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("graft-srch-out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-srch-ck").toString
     val input = MemoryStream[(Long, String)]
-    val q = Streams.searchProbeStream(sp,
-      input.toDF().toDF("query_id", "tok"), "srch_stream_idx", out, ckpt)
+    val q = Streams.probeStream(input.toDF().toDF("query_id", "tok"), out,
+      ckpt)(graft.operators.Search.probeSearchIndexMany(sp,
+        "srch_stream_idx", _))
     // queries must arrive whole (a query IS its term bag) — batches
     // split BETWEEN queries
     Seq(queries.filter(_._1 == 1L), queries.filter(_._1 >= 2L)).foreach { chunk =>
@@ -756,8 +792,9 @@ class StreamingSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("graft-cprobe-out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-cprobe-ck").toString
     val input = MemoryStream[(Long, String)]
-    val q = Streams.containmentProbeStream(sp,
-      input.toDF().toDF("doc_id", "text"), "cont_stream_idx", out, ckpt)
+    val q = Streams.probeStream(input.toDF().toDF("doc_id", "text"), out,
+      ckpt)(graft.operators.Dedup.probeContainmentIndex(sp,
+        "cont_stream_idx", _))
     arrivals.grouped(15).foreach { chunk =>
       input.addData(chunk.toIndexedSeq)
       q.processAllAvailable()
@@ -1266,8 +1303,8 @@ class StreamingSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("graft-editp-out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-editp-ck").toString
     val input = MemoryStream[(Long, String)]
-    val q = Streams.editProbeStream(sp,
-      input.toDF().toDF("probe_key", "probe_name"), "edit_persist_idx", out, ckpt)
+    val q = Streams.probeStream(input.toDF().toDF("probe_key", "probe_name"),
+      out, ckpt)(graft.operators.Dedup.probeEditIndex(sp, "edit_persist_idx", _))
     arrivals.grouped(25).foreach { chunk =>
       input.addData(chunk.toIndexedSeq)
       q.processAllAvailable()
@@ -1296,8 +1333,8 @@ class StreamingSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("graft-ivfp-out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ivfp-ck").toString
     val input = MemoryStream[(Long, Seq[Double])]
-    val q = Streams.ivfProbeStream(sp,
-      input.toDF().toDF("vec_id", "v"), "ivf_stream_idx", out, ckpt)
+    val q = Streams.probeStream(input.toDF().toDF("vec_id", "v"), out,
+      ckpt)(graft.operators.Similarity.probeIvfIndexOn(sp, "ivf_stream_idx", _))
     queries.grouped(math.max(1, queries.length / 2 + 1)).foreach { chunk =>
       input.addData(chunk.toIndexedSeq)
       q.processAllAvailable()
@@ -1334,8 +1371,9 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft-ivfpqa-ck").toString
     val input = MemoryStream[(Long, Seq[Double])]
-    val q = Streams.ivfPqAppendStream(sp,
-      input.toDF().toDF("vec_id", "v"), "ivfpq_stream_a", ckpt)
+    val q = Streams.foreachBatchStream(input.toDF().toDF("vec_id", "v"),
+      ckpt)((b, _) => graft.operators.Similarity.appendToIvfPqIndex(sp,
+        "ivfpq_stream_a", b))
     fresh.grouped(20).foreach { chunk =>
       input.addData(chunk.toIndexedSeq)
       q.processAllAvailable()
@@ -1364,9 +1402,9 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt2 = java.nio.file.Files
       .createTempDirectory("graft-ivfpqp-ck").toString
     val qin = MemoryStream[(Long, Seq[Double])]
-    val pq = Streams.ivfPqProbeStream(sp,
-      qin.toDF().toDF("vec_id", "v"), "ivfpq_stream_a", out, ckpt2,
-      k = 3, nProbe = 4, rerank = 6)
+    val pq = Streams.probeStream(qin.toDF().toDF("vec_id", "v"), out,
+      ckpt2)(graft.operators.Similarity.probeIvfPqIndex(sp, "ivfpq_stream_a",
+        _, k = 3, nProbe = 4, rerank = 6))
     fresh.take(10).grouped(5).foreach { chunk =>
       qin.addData(chunk.toIndexedSeq)
       pq.processAllAvailable()
@@ -1544,8 +1582,9 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1)))
     val ckpt = java.nio.file.Files.createTempDirectory("graft-sapp-ck").toString
     val input = MemoryStream[(Long, String)]
-    val q = Streams.minhashAppendStream(sp,
-      input.toDF().toDF("doc_id", "text"), "mh_sapp_idx", ckpt)
+    val q = Streams.foreachBatchStream(input.toDF().toDF("doc_id", "text"),
+      ckpt)((b, _) => graft.operators.Dedup.appendToMinhashIndex(sp,
+        "mh_sapp_idx", b))
     arrivals.grouped(math.max(1, arrivals.length / 3 + 1)).foreach { chunk =>
       input.addData(chunk.toIndexedSeq)
       q.processAllAvailable()
@@ -1576,8 +1615,9 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1)))
     val eCkpt = java.nio.file.Files.createTempDirectory("graft-sapp-eck").toString
     val eInput = MemoryStream[(Long, String)]
-    val eq = Streams.editAppendStream(sp,
-      eInput.toDF().toDF("key", "name"), "edit_sapp_idx", eCkpt)
+    val eq = Streams.foreachBatchStream(eInput.toDF().toDF("key", "name"),
+      eCkpt)((b, _) => graft.operators.Dedup.appendToEditIndex(sp,
+        "edit_sapp_idx", b))
     keyArrivals.grouped(math.max(1, keyArrivals.length / 2 + 1)).foreach { chunk =>
       eInput.addData(chunk.toIndexedSeq)
       eq.processAllAvailable()
@@ -1617,8 +1657,8 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft-phs-ck").toString
     val input = MemoryStream[(Long, Long)]
-    val q = Streams.phashAppendStream(sp,
-      input.toDF().toDF("doc_id", "phash"), "ph_sapp_idx", ckpt)
+    val q = Streams.foreachBatchStream(input.toDF().toDF("doc_id", "phash"),
+      ckpt)((b, _) => Multimodal.appendToPhashIndex(sp, "ph_sapp_idx", b))
     arrivals.grouped(math.max(1, arrivals.length / 3 + 1)).foreach { chunk =>
       input.addData(chunk.toIndexedSeq)
       q.processAllAvailable()
@@ -1640,8 +1680,8 @@ class StreamingSpec extends AnyFunSuite {
       .createTempDirectory("graft-phs-pck").toString
     val probeRows = probes.collect().map(r => (r.getLong(0), r.getLong(1)))
     val pInput = MemoryStream[(Long, Long)]
-    val pq = Streams.phashProbeStream(sp,
-      pInput.toDF().toDF("doc_id", "phash"), "ph_sapp_full", outPath, pCkpt)
+    val pq = Streams.probeStream(pInput.toDF().toDF("doc_id", "phash"),
+      outPath, pCkpt)(Multimodal.probePhashIndex(sp, "ph_sapp_full", _))
     probeRows.grouped(math.max(1, probeRows.length / 2 + 1)).foreach { chunk =>
       pInput.addData(chunk.toIndexedSeq)
       pq.processAllAvailable()
@@ -1675,8 +1715,9 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1)))
     val ckpt = java.nio.file.Files.createTempDirectory("graft-wapp-ck").toString
     val input = MemoryStream[(Long, String)]
-    val q = Streams.winnowAppendStream(sp,
-      input.toDF().toDF("doc_id", "text"), "wn_sapp_idx", ckpt)
+    val q = Streams.foreachBatchStream(input.toDF().toDF("doc_id", "text"),
+      ckpt)((b, _) => graft.operators.TextAnalysis.appendToWinnowIndex(sp,
+        "wn_sapp_idx", b))
     arrivals.grouped(math.max(1, arrivals.length / 3 + 1)).foreach { chunk =>
       input.addData(chunk.toIndexedSeq)
       q.processAllAvailable()
@@ -1699,8 +1740,9 @@ class StreamingSpec extends AnyFunSuite {
     val pCkpt = java.nio.file.Files
       .createTempDirectory("graft-wprobe-ck").toString
     val pInput = MemoryStream[(Long, String)]
-    val pq = Streams.winnowProbeStream(sp,
-      pInput.toDF().toDF("doc_id", "text"), "wn_sapp_full", outPath, pCkpt)
+    val pq = Streams.probeStream(pInput.toDF().toDF("doc_id", "text"),
+      outPath, pCkpt)(graft.operators.TextAnalysis.probeWinnowIndex(sp,
+        "wn_sapp_full", _))
     val probeRows = probes.collect().map(r => (r.getLong(0), r.getString(1)))
     probeRows.grouped(math.max(1, probeRows.length / 2 + 1)).foreach { chunk =>
       pInput.addData(chunk.toIndexedSeq)
@@ -1732,8 +1774,9 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1)))
     val ckpt = java.nio.file.Files.createTempDirectory("graft-lmapp-ck").toString
     val input = MemoryStream[(Long, String)]
-    val q = Streams.lmAppendStream(sp,
-      input.toDF().toDF("doc_id", "text"), "lm_sapp_idx", ckpt)
+    val q = Streams.foreachBatchStream(input.toDF().toDF("doc_id", "text"),
+      ckpt)((b, _) => graft.operators.TextAnalysis.appendToLmIndex(sp,
+        "lm_sapp_idx", b))
     arrivals.grouped(math.max(1, arrivals.length / 3 + 1)).foreach { chunk =>
       input.addData(chunk.toIndexedSeq)
       q.processAllAvailable()
@@ -1756,8 +1799,9 @@ class StreamingSpec extends AnyFunSuite {
     val pCkpt = java.nio.file.Files
       .createTempDirectory("graft-lmprobe-ck").toString
     val pInput = MemoryStream[(Long, String)]
-    val pq = Streams.lmProbeStream(sp,
-      pInput.toDF().toDF("doc_id", "text"), "lm_sapp_full", outPath, pCkpt)
+    val pq = Streams.probeStream(pInput.toDF().toDF("doc_id", "text"),
+      outPath, pCkpt)(graft.operators.TextAnalysis.probeLmIndex(sp,
+        "lm_sapp_full", _))
     val probeRows = probes.collect().map(r => (r.getLong(0), r.getString(1)))
     probeRows.grouped(math.max(1, probeRows.length / 2 + 1)).foreach { chunk =>
       pInput.addData(chunk.toIndexedSeq)
@@ -1786,8 +1830,9 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft-cms-ck").toString
     val input = MemoryStream[(Long, String)]
-    val q = Streams.cmsAppendStream(sp,
-      input.toDF().toDF("doc_id", "text"), "cms_sapp", ckpt)
+    val q = Streams.foreachBatchStream(input.toDF().toDF("doc_id", "text"),
+      ckpt)((b, _) => graft.operators.TextAnalysis.appendToCmsSketch(sp,
+        "cms_sapp", b))
     arrivals.grouped(math.max(1, arrivals.length / 3 + 1)).foreach { chunk =>
       input.addData(chunk.toIndexedSeq)
       q.processAllAvailable()
@@ -1872,8 +1917,8 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1)))
     val chunks = docs.grouped(math.max(1, docs.length / 2 + 1)).toSeq
     val input = MemoryStream[(Long, String)]
-    val q = Streams.snapshotAppendStream(sp,
-      input.toDF().toDF("doc_id", "text"), table, ckpt)
+    val q = Streams.foreachBatchStream(input.toDF().toDF("doc_id", "text"),
+      ckpt)((b, _) => FormatIO.appendSnapshot(sp, b, table))
     chunks.foreach { chunk =>
       input.addData(chunk.toIndexedSeq)
       q.processAllAvailable()
