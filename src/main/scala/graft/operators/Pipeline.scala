@@ -46,7 +46,9 @@ object Pipeline {
       case failed: Throwable =>
         do CancelTagged(sc, tag)
         while (!pool.awaitTermination(50, TimeUnit.MILLISECONDS))
-        // jobs an ended branch left running (asynchronous AQE stages)
+        // once more after the branches end: it queues behind the stage
+        // cancels a failing AQE query posts on its way out, so every
+        // tagged job has ended when this returns
         CancelTagged(sc, tag)
         throw (failed match {
           case e: ExecutionException => e.getCause

@@ -1088,11 +1088,12 @@ object Streams {
   /** Run `body` on every micro-batch of `rows` — the one path that
     * keeps a persisted index current under a stream of arrivals:
     * `foreachBatchStream(docs, ckpt)((b, _) =>
-    * Dedup.appendToMinhashIndex(spark, idx, b))` appends each wave and
-    * [[probeStream]] probes with it. A wave costs O(batch), and
-    * `stream appends then probe ≡ batch rebuild then probe`
-    * (spec-proved per family). `batchId` counts micro-batches from 0
-    * and repeats on a replay.
+    * Dedup.appendToMinhashIndex(spark, idx, b))` appends each wave, and
+    * a body that writes `Dedup.probeMinhashIndex(spark, idx, b)` to
+    * parquet probes with it. A wave costs O(batch), and `stream
+    * appends then probe ≡ batch rebuild then probe` (spec-proved per
+    * family). `batchId` counts micro-batches from 0 and repeats on a
+    * replay.
     *
     * Delivery is at-least-once: a batch the query has not recorded in
     * `checkpoint` when it dies runs again after the restart.
@@ -1114,16 +1115,8 @@ object Streams {
       .foreachBatch(body)
       .start()
 
-  /** [[foreachBatchStream]] that appends `probe(batch)` to `outPath` as
-    * parquet — `probeStream(docs, out, ckpt)(Dedup.probeMinhashIndex(
-    * spark, idx, _))`. */
-  def probeStream(rows: DataFrame, outPath: String, checkpoint: String)(
-      probe: DataFrame => DataFrame): StreamingQuery =
-    foreachBatchStream(rows, checkpoint)((batch, _) =>
-      probe(batch).write.mode("append").parquet(outPath))
-
   /** Streaming COMPONENT-LABEL maintenance — the label-level completion
-    * of the streaming dedup story: a MinHash [[probeStream]] turns
+    * of the streaming dedup story: a MinHash index probe stream turns
     * arriving docs into candidate PAIRS; this stream folds an edge
     * stream into a persistent (id, component) labels snapshot via
     * `Graph.incrementalComponents`, so "which duplicate GROUP is this

@@ -726,8 +726,9 @@ class StreamingSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("graft-probe-out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-probe-ck").toString
     val input = MemoryStream[(Long, String)]
-    val q = Streams.probeStream(input.toDF().toDF("doc_id", "text"), out,
-      ckpt)(graft.operators.Dedup.probeMinhashIndex(sp, "mh_stream_idx", _))
+    val q = Streams.foreachBatchStream(input.toDF().toDF("doc_id", "text"),
+      ckpt)((b, _) => graft.operators.Dedup.probeMinhashIndex(sp,
+        "mh_stream_idx", b).write.mode("append").parquet(out))
     arrivals.grouped(15).foreach { chunk =>
       input.addData(chunk.toIndexedSeq)
       q.processAllAvailable()
@@ -757,9 +758,9 @@ class StreamingSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("graft-srch-out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-srch-ck").toString
     val input = MemoryStream[(Long, String)]
-    val q = Streams.probeStream(input.toDF().toDF("query_id", "tok"), out,
-      ckpt)(graft.operators.Search.probeSearchIndexMany(sp,
-        "srch_stream_idx", _))
+    val q = Streams.foreachBatchStream(input.toDF().toDF("query_id", "tok"),
+      ckpt)((b, _) => graft.operators.Search.probeSearchIndexMany(sp,
+        "srch_stream_idx", b).write.mode("append").parquet(out))
     // queries must arrive whole (a query IS its term bag) — batches
     // split BETWEEN queries
     Seq(queries.filter(_._1 == 1L), queries.filter(_._1 >= 2L)).foreach { chunk =>
@@ -792,9 +793,9 @@ class StreamingSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("graft-cprobe-out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-cprobe-ck").toString
     val input = MemoryStream[(Long, String)]
-    val q = Streams.probeStream(input.toDF().toDF("doc_id", "text"), out,
-      ckpt)(graft.operators.Dedup.probeContainmentIndex(sp,
-        "cont_stream_idx", _))
+    val q = Streams.foreachBatchStream(input.toDF().toDF("doc_id", "text"),
+      ckpt)((b, _) => graft.operators.Dedup.probeContainmentIndex(sp,
+        "cont_stream_idx", b).write.mode("append").parquet(out))
     arrivals.grouped(15).foreach { chunk =>
       input.addData(chunk.toIndexedSeq)
       q.processAllAvailable()
@@ -1303,8 +1304,10 @@ class StreamingSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("graft-editp-out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-editp-ck").toString
     val input = MemoryStream[(Long, String)]
-    val q = Streams.probeStream(input.toDF().toDF("probe_key", "probe_name"),
-      out, ckpt)(graft.operators.Dedup.probeEditIndex(sp, "edit_persist_idx", _))
+    val q = Streams.foreachBatchStream(
+      input.toDF().toDF("probe_key", "probe_name"), ckpt)((b, _) =>
+      graft.operators.Dedup.probeEditIndex(sp, "edit_persist_idx", b)
+        .write.mode("append").parquet(out))
     arrivals.grouped(25).foreach { chunk =>
       input.addData(chunk.toIndexedSeq)
       q.processAllAvailable()
@@ -1333,8 +1336,9 @@ class StreamingSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("graft-ivfp-out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ivfp-ck").toString
     val input = MemoryStream[(Long, Seq[Double])]
-    val q = Streams.probeStream(input.toDF().toDF("vec_id", "v"), out,
-      ckpt)(graft.operators.Similarity.probeIvfIndexOn(sp, "ivf_stream_idx", _))
+    val q = Streams.foreachBatchStream(input.toDF().toDF("vec_id", "v"),
+      ckpt)((b, _) => graft.operators.Similarity.probeIvfIndexOn(sp,
+        "ivf_stream_idx", b).write.mode("append").parquet(out))
     queries.grouped(math.max(1, queries.length / 2 + 1)).foreach { chunk =>
       input.addData(chunk.toIndexedSeq)
       q.processAllAvailable()
@@ -1402,9 +1406,10 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt2 = java.nio.file.Files
       .createTempDirectory("graft-ivfpqp-ck").toString
     val qin = MemoryStream[(Long, Seq[Double])]
-    val pq = Streams.probeStream(qin.toDF().toDF("vec_id", "v"), out,
-      ckpt2)(graft.operators.Similarity.probeIvfPqIndex(sp, "ivfpq_stream_a",
-        _, k = 3, nProbe = 4, rerank = 6))
+    val pq = Streams.foreachBatchStream(qin.toDF().toDF("vec_id", "v"),
+      ckpt2)((b, _) => graft.operators.Similarity.probeIvfPqIndex(sp,
+        "ivfpq_stream_a", b, k = 3, nProbe = 4, rerank = 6)
+        .write.mode("append").parquet(out))
     fresh.take(10).grouped(5).foreach { chunk =>
       qin.addData(chunk.toIndexedSeq)
       pq.processAllAvailable()
@@ -1680,8 +1685,9 @@ class StreamingSpec extends AnyFunSuite {
       .createTempDirectory("graft-phs-pck").toString
     val probeRows = probes.collect().map(r => (r.getLong(0), r.getLong(1)))
     val pInput = MemoryStream[(Long, Long)]
-    val pq = Streams.probeStream(pInput.toDF().toDF("doc_id", "phash"),
-      outPath, pCkpt)(Multimodal.probePhashIndex(sp, "ph_sapp_full", _))
+    val pq = Streams.foreachBatchStream(pInput.toDF().toDF("doc_id", "phash"),
+      pCkpt)((b, _) => Multimodal.probePhashIndex(sp, "ph_sapp_full", b)
+        .write.mode("append").parquet(outPath))
     probeRows.grouped(math.max(1, probeRows.length / 2 + 1)).foreach { chunk =>
       pInput.addData(chunk.toIndexedSeq)
       pq.processAllAvailable()
@@ -1740,9 +1746,9 @@ class StreamingSpec extends AnyFunSuite {
     val pCkpt = java.nio.file.Files
       .createTempDirectory("graft-wprobe-ck").toString
     val pInput = MemoryStream[(Long, String)]
-    val pq = Streams.probeStream(pInput.toDF().toDF("doc_id", "text"),
-      outPath, pCkpt)(graft.operators.TextAnalysis.probeWinnowIndex(sp,
-        "wn_sapp_full", _))
+    val pq = Streams.foreachBatchStream(pInput.toDF().toDF("doc_id", "text"),
+      pCkpt)((b, _) => graft.operators.TextAnalysis.probeWinnowIndex(sp,
+        "wn_sapp_full", b).write.mode("append").parquet(outPath))
     val probeRows = probes.collect().map(r => (r.getLong(0), r.getString(1)))
     probeRows.grouped(math.max(1, probeRows.length / 2 + 1)).foreach { chunk =>
       pInput.addData(chunk.toIndexedSeq)
@@ -1799,9 +1805,9 @@ class StreamingSpec extends AnyFunSuite {
     val pCkpt = java.nio.file.Files
       .createTempDirectory("graft-lmprobe-ck").toString
     val pInput = MemoryStream[(Long, String)]
-    val pq = Streams.probeStream(pInput.toDF().toDF("doc_id", "text"),
-      outPath, pCkpt)(graft.operators.TextAnalysis.probeLmIndex(sp,
-        "lm_sapp_full", _))
+    val pq = Streams.foreachBatchStream(pInput.toDF().toDF("doc_id", "text"),
+      pCkpt)((b, _) => graft.operators.TextAnalysis.probeLmIndex(sp,
+        "lm_sapp_full", b).write.mode("append").parquet(outPath))
     val probeRows = probes.collect().map(r => (r.getLong(0), r.getString(1)))
     probeRows.grouped(math.max(1, probeRows.length / 2 + 1)).foreach { chunk =>
       pInput.addData(chunk.toIndexedSeq)
