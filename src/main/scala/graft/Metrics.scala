@@ -1,9 +1,11 @@
 package graft
 
 import org.apache.spark.graft.BusDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
@@ -64,9 +66,25 @@ object Metrics {
   case class Job(id: Int, description: Option[String], startMs: Long,
       endMs: Long)
 
+  /** What [[withJobs]] saw: the jobs, in submission order, and the
+    * classes Spark's code generator compiled meanwhile (misses of its
+    * class cache, `GraftSession.CodegenCacheEntries`) with their total
+    * compile time. */
+  case class Run(jobs: Seq[Job], compiled: Long, compileMs: Double)
+
+  /** Spark's JVM-wide compile counters: (classes compiled, ns spent).
+    * The count is the updates of `CodegenMetrics.METRIC_COMPILATION_TIME`;
+    * the time is the exact running sum the code generator keeps beside
+    * it (the histogram's own snapshot is a decaying sample, not a
+    * sum). */
+  private def compiles(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
   /** Run `action` recording the Spark jobs launched inside, in
-    * submission order. */
-  def withJobs[T](spark: SparkSession)(action: => T): (T, Seq[Job]) = {
+    * submission order, and the classes compiled while it ran. The
+    * compile counters are JVM-wide: work that other threads run
+    * concurrently blends into them. */
+  def withJobs[T](spark: SparkSession)(action: => T): (T, Run) = {
     val started = new ConcurrentHashMap[Int, (Option[String], Long)]
     val jobs = new ConcurrentLinkedQueue[Job]
     val l = new SparkListener {
@@ -81,11 +99,13 @@ object Metrics {
     val sc = spark.sparkContext
     sc.addSparkListener(l)
     try {
+      val (n0, ns0) = compiles()
       val out = action
+      val (n1, ns1) = compiles()
       // every job of the action has ended before it returns; draining
       // the bus delivers their events
       BusDrain.drain(sc)
-      (out, jobs.asScala.toSeq.sortBy(_.id))
+      (out, Run(jobs.asScala.toSeq.sortBy(_.id), n1 - n0, (ns1 - ns0) / 1e6))
     } finally sc.removeSparkListener(l)
   }
 
@@ -95,8 +115,8 @@ object Metrics {
     * of one, which at a 1000-executor cluster is |cells| round trips of
     * scheduler latency on an otherwise sample-sized computation. */
   def withJobCount[T](spark: SparkSession)(action: => T): (T, Int) = {
-    val (out, jobs) = withJobs(spark)(action)
-    (out, jobs.size)
+    val (out, run) = withJobs(spark)(action)
+    (out, run.jobs.size)
   }
 
   /** Run `action` with a listener attached; returns (result, aggregated

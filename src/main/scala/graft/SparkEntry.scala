@@ -1463,7 +1463,8 @@ object SparkEntry {
         |SELECT p_type AS dict_value, CAST(0 AS BIGINT) AS is_new FROM base
         |UNION ALL
         |SELECT p_type AS dict_value, CAST(1 AS BIGINT) AS is_new FROM cand
-        |WHERE p_type NOT IN (SELECT p_type FROM base)
+        |WHERE NOT EXISTS (SELECT 1 FROM base
+        |  WHERE base.p_type IS NOT DISTINCT FROM cand.p_type)
         |ORDER BY dict_value""".stripMargin,
     "q_completion_rate" ->
       """SELECT n_name, count(*) AS n_orders,

@@ -13,7 +13,7 @@ import graft.sources.Tables
   * dict becomes a pivot over a fact table; "latest status wins" becomes a
   * row_number window; weekly-reminder targeting becomes an anti-join;
   * the mCIDE dictionary becomes distinct-per-key with a dedup-checked
-  * append (anti-join ∪ base).
+  * append (one grouped size test per value).
   */
 object Clif {
 
@@ -31,8 +31,10 @@ object Clif {
       .orderBy(col("doc_id"))
 
   /** Status pivot matrix (state.py:145-179): site × status counts.
-    * Nations play the sites, order status plays the run status. Explicit
-    * pivot values keep the plan static (no driver-side distinct scan).
+    * Nations play the sites, order status plays the run status. One
+    * filtered count per fixed status value keeps the plan to a single
+    * aggregate (Spark's `pivot` plans two aggregates and two shuffles)
+    * with no driver-side distinct scan.
     * Only nation (a true fixed-cardinality dim) carries a broadcast hint;
     * customer scales with the data, so AQE owns that join strategy —
     * broadcast at small SF, shuffle at 100 TB. */
@@ -40,14 +42,13 @@ object Clif {
     val ord = Tables.orders(spark, dir).select("o_custkey", "o_orderstatus")
     val cust = Tables.customer(spark, dir).select("c_custkey", "c_nationkey")
     val nat = Tables.nation(spark, dir).select("n_nationkey", "n_name")
+    def cnt(status: String): Column =
+      count(when(col("o_orderstatus") === status, 1))
+        .as(s"cnt_${status.toLowerCase}")
     ord.join(cust, col("o_custkey") === col("c_custkey"))
       .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"))
-      .pivot("o_orderstatus", Seq("F", "O", "P"))
-      .count()
-      .na.fill(0L, Seq("F", "O", "P"))
-      .select(col("n_name"), col("F").as("cnt_f"), col("O").as("cnt_o"),
-        col("P").as("cnt_p"))
+      .agg(cnt("F"), cnt("O"), cnt("P"))
       .orderBy(col("n_name"))
   }
 
@@ -259,20 +260,17 @@ object Clif {
       .distinct()
       .orderBy(col("dict_key"), col("dict_value"))
 
-  /** Dedup-checked dictionary append (mcide.py:57-60): candidates are
-    * added iff absent — anti-join then union with the base set. */
-  def categoryAppend(spark: SparkSession, dir: String): DataFrame = {
-    val part = Tables.part(spark, dir)
-    val base = part.filter(col("p_size") <= 25).select(col("p_type")).distinct()
-      .withColumn("is_new", lit(0L))
-    val candidates = part.filter(col("p_size") > 25).select(col("p_type")).distinct()
-    val appended = candidates
-      .join(base.select("p_type"), Seq("p_type"), "left_anti")
-      .withColumn("is_new", lit(1L))
-    base.unionByName(appended)
-      .select(col("p_type").as("dict_value"), col("is_new"))
+  /** Dedup-checked dictionary append (mcide.py:57-60): candidates
+    * (size > 25) are added iff absent from the base set (size ≤ 25).
+    * One aggregate per type over the sized rows: a type with any base
+    * row keeps `is_new = 0`, any other is appended with 1. A null type
+    * is one group like any other, so it yields at most one row. */
+  def categoryAppend(spark: SparkSession, dir: String): DataFrame =
+    Tables.part(spark, dir)
+      .filter(col("p_size").isNotNull)
+      .groupBy(col("p_type").as("dict_value"))
+      .agg(when(min(col("p_size")) <= 25, 0L).otherwise(1L).as("is_new"))
       .orderBy(col("dict_value"))
-  }
 
   /** Dashboard completion-rate aggregation (workflow.md:66-77): share of
     * each status per site. Customer is scale-variable — no broadcast

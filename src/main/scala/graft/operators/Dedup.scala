@@ -1012,9 +1012,7 @@ object Dedup {
     * order; the verify join makes precision exact). */
   def appendToContainmentIndex(spark: SparkSession, name: String,
       newDocs: DataFrame): Unit = {
-    val meta = spark.table(s"${name}_meta").collect().head
-    val tau = meta.getAs[Double]("tau")
-    val shingle = meta.getAs[Int]("shingle")
+    val ContainmentBuild(tau, shingle) = containmentBuild(spark, name)
     // four segment tables move under ONE epoch commit (FormatIO index
     // epochs): a pinned probe racing this wave sees none of it until
     // the commit marker lands
@@ -1073,11 +1071,26 @@ object Dedup {
     * stored prefixes are sized for it — probing below would silently
     * lose reverse-direction recall; enforced against `_meta`). */
   def probeContainmentBoth(spark: SparkSession, name: String,
-      newDocs: DataFrame, tau: Double = 0.6): DataFrame = {
-    val meta = Metrics.phase(spark, "containment_both.meta")(
-      spark.table(s"${name}_meta").collect().head)
-    val tauBuild = meta.getAs[Double]("tau")
-    val shingle = meta.getAs[Int]("shingle")
+      newDocs: DataFrame, tau: Double = 0.6): DataFrame =
+    probeContainmentBoth(spark, name, newDocs, tau,
+      Metrics.phase(spark, "containment_both.meta")(containmentBuild(spark, name)))
+
+  /** The parameters a containment index was built with, as persisted
+    * in its `_meta` row by [[buildContainmentIndex]]. */
+  case class ContainmentBuild(tau: Double, shingle: Int)
+
+  /** Read `<name>_meta` (one collect job). */
+  def containmentBuild(spark: SparkSession, name: String): ContainmentBuild = {
+    val meta = spark.table(s"${name}_meta").collect().head
+    ContainmentBuild(meta.getAs[Double]("tau"), meta.getAs[Int]("shingle"))
+  }
+
+  /** [[probeContainmentBoth]] with the index's build parameters already
+    * read, for a caller that needs them too (`Pipeline.curateIncrement`
+    * reads `_meta` once per call). */
+  def probeContainmentBoth(spark: SparkSession, name: String,
+      newDocs: DataFrame, tau: Double, built: ContainmentBuild): DataFrame = {
+    val ContainmentBuild(tauBuild, shingle) = built
     require(tau >= tauBuild - 1e-12,
       s"probe tau=$tau below the index's build tau=$tauBuild " +
         s"($name stores prefixes sized for $tauBuild; probing below it " +

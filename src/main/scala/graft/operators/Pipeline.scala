@@ -132,8 +132,9 @@ object Pipeline {
     val batchDocs = Metrics.phase(spark, "increment.batch")(
       batch.select(col("doc_id"), col("text")).localCheckpoint())
     val bIds = batchDocs.select(col("doc_id"))
-    val tau = Metrics.phase(spark, "increment.meta")(
-      spark.table(s"${contIndex}_meta").collect().head.getAs[Double]("tau"))
+    val built = Metrics.phase(spark, "increment.meta")(
+      Dedup.containmentBuild(spark, contIndex))
+    val tau = built.tau
     // The probe branches below are INDEPENDENT, and three of them carry
     // eager materializations during CONSTRUCTION (the near-hit probe
     // checkpoint, the within-batch LSH bands + component labeling, the
@@ -163,7 +164,7 @@ object Pipeline {
         Dedup.splitLeakageOn(batchDocs, tau)
           .select(col("train_doc").as("doc_id")).distinct()
       })
-    val bothDir = Dedup.probeContainmentBoth(spark, contIndex, batchDocs, tau)
+    val bothDir = Dedup.probeContainmentBoth(spark, contIndex, batchDocs, tau, built)
     // corpus hits (exact + near) — each probe is O(batch)
     val corpusExact = Dedup.probeExactIndex(spark, mhIndex, batchDocs)
       .select(col("doc_id")).distinct()

@@ -9,6 +9,8 @@ package graft.tools
   *   [phase] <key>   <name> jobs=<n> span=<s>   first start to last end
   *   [phase] <key>   (final) jobs=<n> span=<s>  jobs outside any phase
   *   [phase] <key>   (no job) <s>          wall with no job running
+  *   [codegen] <key> compiled=<n> <ms> <run>  classes compiled during
+  *                                          the warm-up and untimed runs
   *
   * `PERF_EXPLAIN=1` also prints each query's formatted physical plan.
   *
@@ -31,7 +33,9 @@ object PerfProbe {
     val spark = graft.GraftSession.getOrCreate()
     names.foreach { n =>
       val fn = graft.SparkEntry.queries(n)
-      fn(spark, sfDir).count() // warmup
+      def codegen(run: String, r: graft.Metrics.Run): Unit =
+        println(f"[codegen] $n compiled=${r.compiled}%-4d ${r.compileMs}%.1fms $run")
+      codegen("warm-up", graft.Metrics.withJobs(spark)(fn(spark, sfDir).count())._2)
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
@@ -39,11 +43,12 @@ object PerfProbe {
       }
       println(f"[perf] $n min=${times.min}%.3f times=${times.map(t => f"$t%.3f").mkString(",")}")
 
-      val ((t0, t1), jobs) = graft.Metrics.withJobs(spark) {
+      val ((t0, t1), run) = graft.Metrics.withJobs(spark) {
         val t0 = System.currentTimeMillis()
         fn(spark, sfDir).count()
         (t0, System.currentTimeMillis())
       }
+      val jobs = run.jobs
       val phases = jobs.groupBy(_.description.getOrElse("(final)")).toSeq
         .map { case (d, js) => (d, js.size, js.map(_.startMs).min, js.map(_.endMs).max) }
         .sortBy(_._3)
@@ -55,6 +60,7 @@ object PerfProbe {
         println(f"[phase] $n   $d%-24s jobs=$k%-3d span=${(b - a) / 1e3}%.3fs")
       }
       println(f"[phase] $n   ${"(no job)"}%-24s ${(wall - busy) / 1e3}%.3fs")
+      codegen("untimed", run)
       if (sys.env.get("PERF_EXPLAIN").contains("1"))
         fn(spark, sfDir).explain("formatted")
     }

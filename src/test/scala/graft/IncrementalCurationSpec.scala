@@ -160,6 +160,24 @@ class IncrementalCurationSpec extends AnyFunSuite {
         s"only-ref=${((ref1 ++ ref2) -- streamed).take(5)}")
   }
 
+  test("curateIncrement reads the containment index's _meta row once") {
+    val docs = Tables.documents(spark, sf)
+    val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
+    val corpusDir = java.nio.file.Files
+      .createTempDirectory("graft-meta-once").toString
+    docs.filter(col("doc_id") <= maxId / 2)
+      .write.parquet(s"$corpusDir/documents.parquet")
+    Dedup.buildMinhashIndex(spark, corpusDir, "meta_once_mh", nBuckets = 4)
+    Dedup.buildContainmentIndex(spark, corpusDir, "meta_once_cont", nBuckets = 4)
+    val batch = docs.filter(col("doc_id") > maxId / 2)
+      .select(col("doc_id"), col("text"))
+    val (_, run) = Metrics.withJobs(spark)(Pipeline.curateIncrement(spark,
+      "meta_once_mh", "meta_once_cont", batch).collect())
+    val metaJobs = run.jobs.flatMap(_.description)
+      .filter(Set("increment.meta", "containment_both.meta"))
+    assert(metaJobs.size == 1, s"_meta read by ${metaJobs.size} jobs: $metaJobs")
+  }
+
   test("pooled branches: a branch that throws cancels its sibling's " +
     "running job, and its own exception surfaces") {
     val sc = spark.sparkContext

@@ -13,6 +13,8 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .config("spark.sql.codegen.cache.maxEntries",
+        GraftSession.CodegenCacheEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
@@ -297,6 +299,25 @@ class QuerySuiteSpec extends AnyFunSuite {
   test("category_append: no duplicate dict values, new flagged correctly") {
     val df = SparkEntry.queries("q_category_append")(spark, sf)
     assert(df.count() == df.select("dict_value").distinct().count())
+  }
+
+  test("category_append: one row per type, null types and sizes included") {
+    val sp = spark
+    import sp.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-cat-append").toString
+    Seq[(String, Option[Int])](
+      ("A", Some(10)), ("A", Some(30)), // in the base and a candidate
+      ("B", Some(30)), ("B", Some(26)), // candidate only
+      ("C", None), // no size: neither base nor candidate
+      ("D", None), ("D", Some(40)), // candidate once its size is known
+      ("E", Some(25)), // the base's upper edge
+      (null, Some(10)), (null, Some(30)), (null, None))
+      .toDF("p_type", "p_size")
+      .write.parquet(s"$dir/part.parquet")
+    val got = graft.operators.Clif.categoryAppend(spark, dir).collect()
+      .map(r => (Option(r.getString(0)), r.getLong(1))).toSeq
+    assert(got.sortBy(_._1.getOrElse("")) == Seq(None -> 0L, Some("A") -> 0L,
+      Some("B") -> 1L, Some("D") -> 1L, Some("E") -> 0L))
   }
 
   test("federated_union: row count equals full customer count") {
