@@ -52,6 +52,14 @@ object HashExpressions {
   def tokenGrams(c: Column, window: Int, stride: Int = 1,
       cover: Boolean = false): Column =
     toCol(TokenGrams(toExpr(c), window, stride, cover))
+  /** The `text` column normalized the way the DuckDB oracles mirror it:
+    * trimmed, lowercased, whitespace runs collapsed to one space. */
+  def normText: Column = {
+    import org.apache.spark.sql.functions.{col, lower, regexp_replace, trim}
+    regexp_replace(lower(trim(col("text"))), "\\s+", " ")
+  }
+  /** [[normText]] split on single spaces: the normalized tokens. */
+  def normToks: Column = org.apache.spark.sql.functions.split(normText, " ")
   def gramDigests(c: Column, k: Int, hexLen: Int = 32): Column =
     toCol(GramDigests(toExpr(c), k, hexLen))
   def winnowMins(c: Column, w: Int): Column = toCol(WinnowMins(toExpr(c), w))

@@ -42,9 +42,7 @@ object Dedup {
   private def shingledOf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),
-        rollingShingles(
-          regexp_replace(lower(trim(col("text"))), "\\s+", " "), SHINGLE)
-          .as("shingles"))
+        rollingShingles(normText, SHINGLE).as("shingles"))
       .filter(size(col("shingles")) > 0)
 
   private def shingled(spark: SparkSession, dir: String): DataFrame =
@@ -142,7 +140,7 @@ object Dedup {
     * [[exact]], [[keepBest]], the persisted digest relation and the
     * incremental curation path. */
   private[graft] def digestCol: org.apache.spark.sql.Column =
-    md5(regexp_replace(lower(trim(col("text"))), "\\s+", " "))
+    md5(normText)
 
   /** Exact dedup: md5 over normalized text, keep the smallest doc_id per
     * digest. */
@@ -196,7 +194,7 @@ object Dedup {
       .orderBy(col("n_chars").desc, col("doc_id"))
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("n_chars"),
-        md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")).as("text_hash"))
+        md5(normText).as("text_hash"))
       .withColumn("rn", row_number().over(w))
       .groupBy(col("text_hash"))
       .agg(
@@ -328,7 +326,7 @@ object Dedup {
   def simhashPairs(spark: SparkSession, dir: String): DataFrame = {
     val fp = Tables.documents(spark, dir)
       .select(col("doc_id"),
-        simhash64(regexp_replace(lower(trim(col("text"))), "\\s+", " ")).as("fp"))
+        simhash64(normText).as("fp"))
     val banded = fp.select(col("doc_id"), col("fp"),
         explode(expr("transform(sequence(0, 3), " +
           "b -> struct(b AS band_id, shiftright(fp, b * 16) & 65535 AS band_val))")).as("band"))
@@ -376,44 +374,26 @@ object Dedup {
       docs.select(col("doc_id"), digestCol.as("digest"))
         .withColumn("epoch", lit(0L)),
       s"${name}_digests", "digest", nBuckets)
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "doc_id")
-    graft.sources.FormatIO.initIndexEpoch(spark, name)
+    graft.sources.FormatIO.initIndex(spark, name, "doc_id")
   }
 
   /** TOMBSTONE-DELETE documents from the persisted MinHash index — the
     * erasure half of index maintenance (GDPR-class removal runs at
-    * 100 TB cadence too): deleted ids land in a side-table that every
-    * probe anti-joins, so the documents vanish from probe results
-    * IMMEDIATELY at O(deleted ids) cost, with no index rewrite.
-    * [[purgeMinhashTombstones]] later removes the bytes during the
-    * same bucket-preserving rewrite a compaction performs. Deleted ids
-    * are retired permanently — re-appending a tombstoned doc_id is
-    * unsupported (the corpus convention is monotone never-reused ids). */
+    * 100 TB cadence too): the documents vanish from both probes at
+    * once, with no index rewrite. One
+    * [[graft.sources.FormatIO.deleteWave]]; its contract (idempotent,
+    * epoch-atomic, crash-scrubbed) holds for every index family. */
   def deleteFromMinhashIndex(spark: SparkSession, name: String,
-      docIds: DataFrame): Unit = {
-    val e = graft.sources.FormatIO.stageIndexEpoch(spark, name,
-      Seq(s"${name}_tombstones"))
-    graft.sources.FormatIO.appendTombstones(spark,
-      docIds.select(col("doc_id")).distinct().withColumn("epoch", lit(e)),
-      s"${name}_tombstones")
-    graft.sources.FormatIO.commitIndexEpoch(spark, name, e)
-  }
+      docIds: DataFrame): Unit =
+    graft.sources.FormatIO.deleteWave(spark, name, docIds.select(col("doc_id")))
 
-  /** Physically erase tombstoned documents' rows from the MinHash
-    * index's band and digest relations (bucket-preserving rewrite,
-    * doubles as a compaction), then reset the tombstone table. */
+  /** Physically erase tombstoned documents' rows from the band and
+    * digest relations ([[graft.sources.FormatIO.purgeTombstones]]);
+    * returns the band table's stats. */
   def purgeMinhashTombstones(spark: SparkSession, name: String)
-      : graft.sources.FormatIO.TableCompactStats = {
-    val tomb = spark.table(s"${name}_tombstones").localCheckpoint()
-    val stats = graft.sources.FormatIO.purgeBucketedTable(spark,
-      s"${name}_bands", tomb, "doc_id")
-    graft.sources.FormatIO.purgeBucketedTable(spark,
-      s"${name}_digests", tomb, "doc_id")
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "doc_id")
-    stats
-  }
+      : graft.sources.FormatIO.TableCompactStats =
+    graft.sources.FormatIO.purgeTombstones(spark, name,
+      Seq(s"${name}_bands", s"${name}_digests")).head
 
   /** Probe the persisted digest relation with a batch of documents:
     * (doc_id, idx_doc) pairs whose NORMALIZED text is byte-identical —
@@ -426,11 +406,7 @@ object Dedup {
     // single commit marker lands (FormatIO index-epoch protocol)
     val pin = graft.sources.FormatIO.committedEpoch(spark, name)
     newDocs.select(col("doc_id"), digestCol.as("digest"))
-      .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_digests", pin)
-        // tombstoned docs are logically deleted until the purge
-        // rewrites the bytes (see deleteFromMinhashIndex)
-        .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_tombstones",
-          pin), Seq("doc_id"), "left_anti")
+      .join(graft.sources.FormatIO.liveAt(spark, name, s"${name}_digests", pin)
         .select(col("digest"), col("doc_id").as("idx_doc")), Seq("digest"))
       .filter(col("doc_id") =!= col("idx_doc"))
       .select(col("doc_id"), col("idx_doc"))
@@ -449,11 +425,9 @@ object Dedup {
     val probe = banded(shingledOf(newDocs))
       .select(col("doc_id"), col("band_id"), col("band_sig"))
       .withColumn("band_key", xxhash64(col("band_id"), col("band_sig")))
-    val index = graft.sources.FormatIO.pinnedAt(spark, s"${name}_bands", pin)
-      // tombstone anti-join BEFORE the pair symmetrization (deleted
-      // docs must vanish from either side of the emitted pair)
-      .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_tombstones",
-        pin), Seq("doc_id"), "left_anti")
+    // live rows BEFORE the pair symmetrization (deleted docs must
+    // vanish from either side of the emitted pair)
+    val index = graft.sources.FormatIO.liveAt(spark, name, s"${name}_bands", pin)
       .withColumnRenamed("doc_id", "idx_doc")
     // no terminal orderBy: probes are LIBRARY operators feeding further
     // plans — presentation ordering belongs at the caller's edge, not
@@ -540,11 +514,6 @@ object Dedup {
         col("inter"), col("uni"), col("est_j"), col("exact_j"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
-
-  /** Normalized whitespace tokens (single-space split after collapsing
-    * runs — the exact tokenization the DuckDB oracles mirror). */
-  private def normToks: org.apache.spark.sql.Column =
-    split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
 
   /** doc_id + distinct `shingle`-token shingle set, AS A PLAN. The
     * repartition BEFORE the shingle projection moves only raw text,
@@ -851,10 +820,10 @@ object Dedup {
     graft.sources.FormatIO.writeBucketed(sets.withColumnRenamed("doc_id", "doc_b")
       .withColumnRenamed("st", "sb").withColumn("epoch", lit(0L)),
       s"${name}_sets", "doc_b", nBuckets)
-    val dfreq = sets.select(explode(col("st")).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    dfreq.withColumn("epoch", lit(0L))
-      .write.format("parquet").mode("overwrite").saveAsTable(s"${name}_df")
+    val dfreq = graft.sources.FormatIO.dfCounts(
+      sets.select(explode(col("st")).as("tok")), "tok")
+    graft.sources.FormatIO.writeSegment(spark, s"${name}_df", dfreq, 0L,
+      replace = true)
     // INDEX-SIDE prefixes enable the REVERSE probe direction
     // (C(index -> probe), [[probeContainmentBoth]]): each corpus doc's
     // tau-sized rare-first prefix, bucketed by shingle like the
@@ -875,68 +844,30 @@ object Dedup {
     Seq((tau, shingle)).toDF("tau", "shingle")
       .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Overwrite)
       .saveAsTable(s"${name}_meta")
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "doc_b")
-    graft.sources.FormatIO.initIndexEpoch(spark, name)
+    graft.sources.FormatIO.initIndex(spark, name, "doc_b")
   }
 
   /** TOMBSTONE-DELETE documents from the persisted containment index —
-    * same contract as [[deleteFromMinhashIndex]], plus a NEGATIVE df
-    * segment derived from the index's own postings (one row per
-    * (doc_b, tok), so the per-tok count IS the deleted docs' df
-    * contribution; the deleted text is not needed). The df only orders
-    * prefixes — any order is recall-lossless — but keeping it exact
-    * keeps candidate pruning sharp. Idempotent; tombstoned ids are
-    * retired permanently. */
+    * a [[graft.sources.FormatIO.deleteWave]] whose compensating segment
+    * is a NEGATIVE df segment derived from the index's own postings.
+    * The df only orders prefixes — any order is recall-lossless — but
+    * keeping it exact keeps candidate pruning sharp. */
   def deleteFromContainmentIndex(spark: SparkSession, name: String,
-      docIds: DataFrame): Unit = {
-    // idempotency reads the RAW tombstones (all epochs — a staged-but-
-    // uncommitted retry must not double-append); visibility of THIS
-    // wave is epoch-gated so pinned probes see the negative df segment
-    // and the tombstones at the same instant
-    val fresh = docIds.select(col("doc_id").as("doc_b")).distinct()
-      .join(spark.table(s"${name}_tombstones"), Seq("doc_b"), "left_anti")
-      .localCheckpoint()
-    val e = graft.sources.FormatIO.stageIndexEpoch(spark, name,
-      Seq(s"${name}_df", s"${name}_tombstones"))
-    spark.table(s"${name}_postings")
-      .join(fresh, Seq("doc_b"), "left_semi")
-      .groupBy(col("tok")).agg((-count(lit(1))).as("df"))
-      .withColumn("epoch", lit(e))
-      .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Append)
-      .saveAsTable(s"${name}_df")
-    spark.catalog.refreshTable(s"${name}_df")
-    graft.sources.FormatIO.appendTombstones(spark,
-      fresh.withColumn("epoch", lit(e)), s"${name}_tombstones")
-    graft.sources.FormatIO.commitIndexEpoch(spark, name, e)
-  }
+      docIds: DataFrame): Unit =
+    graft.sources.FormatIO.deleteWave(spark, name,
+      docIds.select(col("doc_id").as("doc_b")), Seq(s"${name}_df"),
+      graft.sources.FormatIO.subtractDf(spark, s"${name}_df",
+        s"${name}_postings", "tok"))
 
-  /** Physically erase tombstoned documents from the containment
-    * index's postings, sets, and prefixes; rebuild the df relation
-    * from the purged postings (collapsing all segments); reset the
-    * tombstones. */
+  /** Physically erase tombstoned documents from the postings, sets and
+    * prefixes, and collapse the df log into one segment counted from
+    * the purged postings; returns the postings table's stats. */
   def purgeContainmentTombstones(spark: SparkSession, name: String)
-      : graft.sources.FormatIO.TableCompactStats = {
-    val tomb = spark.table(s"${name}_tombstones").localCheckpoint()
-    val stats = graft.sources.FormatIO.purgeBucketedTable(spark,
-      s"${name}_postings", tomb, "doc_b")
-    graft.sources.FormatIO.purgeBucketedTable(spark, s"${name}_sets",
-      tomb, "doc_b")
-    graft.sources.FormatIO.purgeBucketedTable(spark, s"${name}_prefixes",
-      tomb, "doc_b")
-    // the rebuilt df collapses every segment into one, tagged at the
-    // CURRENT committed epoch so pinned probes keep reading it
-    spark.table(s"${name}_postings")
-      .groupBy(col("tok")).agg(count(lit(1)).as("df"))
-      .withColumn("epoch",
-        lit(graft.sources.FormatIO.committedEpoch(spark, name)))
-      .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .saveAsTable(s"${name}_df")
-    spark.catalog.refreshTable(s"${name}_df")
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "doc_b")
-    stats
-  }
+      : graft.sources.FormatIO.TableCompactStats =
+    graft.sources.FormatIO.purgeTombstones(spark, name,
+      Seq(s"${name}_postings", s"${name}_sets", s"${name}_prefixes"),
+      graft.sources.FormatIO.rebuildDfLog(spark, s"${name}_df",
+        s"${name}_postings", "tok", _)).head
 
   /** Probe the persisted containment index with a batch of documents
     * (`doc_id`, `text`): directed pairs (probe doc → index doc) with
@@ -953,18 +884,10 @@ object Dedup {
     // concurrent append/delete wave is invisible until its commit
     val pin = graft.sources.FormatIO.committedEpoch(spark, name)
     val sets = tokenShingleSetsOf(newDocs, shingle).localCheckpoint()
-    // the df relation is LOG-STRUCTURED: the build writes one segment of
-    // per-shingle counts and every append adds another, so the true df
-    // is the merge-on-read sum (exact — integer counts). Keeps append
-    // O(batch): updating a single materialized df relation in place
-    // would be an O(distinct-shingles) rewrite per wave. The PROBE
-    // only needs df for ITS OWN tokens, so the semi-join sits BELOW
-    // the merge aggregation — per-probe df cost is O(probe vocabulary),
-    // never O(corpus vocabulary).
-    val probeToks = sets.select(explode(col("st")).as("tok")).distinct()
-    val dfreq = graft.sources.FormatIO.pinnedAt(spark, s"${name}_df", pin)
-      .join(probeToks, Seq("tok"), "left_semi")
-      .groupBy(col("tok")).agg(sum(col("df")).as("df"))
+    // the df relation is a LOG-STRUCTURED df log (FormatIO): the probe
+    // reads the merged df of its own tokens only
+    val dfreq = graft.sources.FormatIO.readDfLog(spark, s"${name}_df", pin,
+      sets.select(explode(col("st")).as("tok")).distinct())
     val prefixes = sets
       .select(col("doc_id"), size(col("st")).as("sz"), explode(col("st")).as("tok"))
       .join(dfreq, Seq("tok"), "left")
@@ -979,10 +902,7 @@ object Dedup {
         (col("pos") + 1).as("pos_a"), col("col.tok").as("tok"))
     val needA = ceil(lit(tau) * col("sz_a") - lit(PruneEps))
     val cands = prefixes.join(
-      graft.sources.FormatIO.pinnedAt(spark, s"${name}_postings", pin)
-        // tombstoned docs are logically deleted until the purge
-        .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_tombstones",
-          pin), Seq("doc_b"), "left_anti"),
+      graft.sources.FormatIO.liveAt(spark, name, s"${name}_postings", pin),
       Seq("tok"))
       .filter(col("doc_a") =!= col("doc_b") &&
         col("sz_b") >= needA &&
@@ -1028,22 +948,14 @@ object Dedup {
       sets.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("st", "sb")
         .withColumn("epoch", lit(e)),
       s"${name}_sets")
-    sets.select(explode(col("st")).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("df"))
-      .withColumn("epoch", lit(e))
-      .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Append)
-      .saveAsTable(s"${name}_df")
-    spark.catalog.refreshTable(s"${name}_df") // see FormatIO.appendBucketed
-    // batch prefixes order by the merged df AS OF this append — any
-    // order is recall-lossless (subset-choice freedom, see build). The
-    // merge aggregation sits ABOVE a semi-join on the batch's own token
-    // set (every batch token is present: its segment appended just
-    // above), exactly as probeContainmentIndex reads df — per-wave df
-    // cost is O(batch vocabulary), never O(corpus vocabulary).
-    val batchToks = sets.select(explode(col("st")).as("tok")).distinct()
-    val mergedDf = spark.table(s"${name}_df").drop("epoch")
-      .join(batchToks, Seq("tok"), "left_semi")
-      .groupBy(col("tok")).agg(sum(col("df")).as("df"))
+    graft.sources.FormatIO.writeSegment(spark, s"${name}_df",
+      graft.sources.FormatIO.dfCounts(
+        sets.select(explode(col("st")).as("tok")), "tok"), e)
+    // batch prefixes order by the merged df AS OF this append, its own
+    // staged segment included (read at e) — any order is
+    // recall-lossless (subset-choice freedom, see build)
+    val mergedDf = graft.sources.FormatIO.readDfLog(spark, s"${name}_df", e,
+      sets.select(explode(col("st")).as("tok")).distinct())
     graft.sources.FormatIO.appendBucketed(spark,
       orderedPrefixes(sets, mergedDf,
         sz => sz - ceil(lit(tau) * sz - lit(PruneEps)) + 1)
@@ -1098,12 +1010,8 @@ object Dedup {
     val pin = graft.sources.FormatIO.committedEpoch(spark, name)
     val sets = Metrics.phase(spark, "containment_both.sets")(
       tokenShingleSetsOf(newDocs, shingle).localCheckpoint())
-    // probe-vocabulary semi-join below the df merge (see
-    // probeContainmentIndex): O(probe vocab), not O(corpus vocab)
-    val probeToks = sets.select(explode(col("st")).as("tok")).distinct()
-    val mergedDf = graft.sources.FormatIO.pinnedAt(spark, s"${name}_df", pin)
-      .join(probeToks, Seq("tok"), "left_semi")
-      .groupBy(col("tok")).agg(sum(col("df")).as("df"))
+    val mergedDf = graft.sources.FormatIO.readDfLog(spark, s"${name}_df", pin,
+      sets.select(explode(col("st")).as("tok")).distinct())
     // forward candidates: probe prefixes (corpus-df-ordered, df-0
     // unseen shingles sort first and match nothing) x full postings
     val pPref = sets
@@ -1120,9 +1028,7 @@ object Dedup {
         (col("pos") + 1).as("pos_a"), col("col.tok").as("tok"))
     val needA = ceil(lit(tau) * col("sz_a") - lit(PruneEps))
     val fwd = pPref.join(
-      graft.sources.FormatIO.pinnedAt(spark, s"${name}_postings", pin)
-        .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_tombstones",
-          pin), Seq("doc_b"), "left_anti"),
+      graft.sources.FormatIO.liveAt(spark, name, s"${name}_postings", pin),
       Seq("tok"))
       .filter(col("doc_a") =!= col("doc_b") &&
         col("sz_b") >= needA &&
@@ -1132,9 +1038,8 @@ object Dedup {
     val pPost = sets.select(col("doc_id").as("doc_a"),
       size(col("st")).as("sz_a"), explode(col("st")).as("tok"))
     val needB = ceil(lit(tau) * col("sz_b") - lit(PruneEps))
-    val rev = graft.sources.FormatIO.pinnedAt(spark, s"${name}_prefixes", pin)
-      .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_tombstones",
-        pin), Seq("doc_b"), "left_anti")
+    val rev = graft.sources.FormatIO
+      .liveAt(spark, name, s"${name}_prefixes", pin)
       .join(pPost, Seq("tok"))
       .filter(col("doc_a") =!= col("doc_b") &&
         col("sz_a") >= needB &&
@@ -1377,36 +1282,22 @@ object Dedup {
     Seq((tau, maxKeyLen)).toDF("tau", "max_key_len")
       .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Overwrite)
       .saveAsTable(s"${name}_meta")
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "index_key")
-    graft.sources.FormatIO.initIndexEpoch(spark, name)
+    graft.sources.FormatIO.initIndex(spark, name, "index_key")
   }
 
-  /** TOMBSTONE-DELETE entity keys from the persisted edit index — same
-    * contract as [[deleteFromMinhashIndex]] (no df relation here; the
+  /** TOMBSTONE-DELETE entity keys from the persisted edit index (a
+    * [[graft.sources.FormatIO.deleteWave]]; no df relation here, the
     * variant postings just stop matching). `keys` carries one
     * `index_key` column. */
   def deleteFromEditIndex(spark: SparkSession, name: String,
-      keys: DataFrame): Unit = {
-    val e = graft.sources.FormatIO.stageIndexEpoch(spark, name,
-      Seq(s"${name}_tombstones"))
-    graft.sources.FormatIO.appendTombstones(spark,
-      keys.select(col("index_key")).distinct().withColumn("epoch", lit(e)),
-      s"${name}_tombstones")
-    graft.sources.FormatIO.commitIndexEpoch(spark, name, e)
-  }
+      keys: DataFrame): Unit =
+    graft.sources.FormatIO.deleteWave(spark, name, keys.select(col("index_key")))
 
-  /** Physically erase tombstoned keys' variant postings; reset the
-    * tombstones. */
+  /** Physically erase tombstoned keys' variant postings. */
   def purgeEditTombstones(spark: SparkSession, name: String)
-      : graft.sources.FormatIO.TableCompactStats = {
-    val tomb = spark.table(s"${name}_tombstones").localCheckpoint()
-    val stats = graft.sources.FormatIO.purgeBucketedTable(spark,
-      s"${name}_postings", tomb, "index_key")
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "index_key")
-    stats
-  }
+      : graft.sources.FormatIO.TableCompactStats =
+    graft.sources.FormatIO.purgeTombstones(spark, name,
+      Seq(s"${name}_postings")).head
 
   /** (k, s) → fenced τ-deletion-variant postings (variant, index_key,
     * index_name) — shared by [[buildEditIndex]] and
@@ -1469,9 +1360,7 @@ object Dedup {
       .select(col("probe_key"), col("probe_name").as("s"))
       .select(col("probe_key"), col("s").as("probe_name"),
         explode(expr(deletionVariantsExpr(tau))).as("variant"))
-    p.join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_postings", pin)
-        .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_tombstones",
-          pin), Seq("index_key"), "left_anti"),
+    p.join(graft.sources.FormatIO.liveAt(spark, name, s"${name}_postings", pin),
       Seq("variant"))
       .filter(col("probe_key") =!= col("index_key") &&
         abs(length(col("probe_name")) - length(col("index_name"))) <= tau)
@@ -1566,12 +1455,8 @@ object Dedup {
   def splitLeakageOn(docs: DataFrame, tau: Double = 0.6,
       shingle: Int = 3): DataFrame = {
     val pairs = containmentJoinOn(docs, tau, shingle)
-    val nibble = substring(md5(col("doc_id").cast("string")), 1, 1)
     val splits = docs
-      .select(col("doc_id"),
-        when(nibble.isin("0", "1"), "test")
-          .when(nibble.isin("2", "3"), "val")
-          .otherwise("train").as("split"))
+      .select(col("doc_id"), Sampling.splitOf(col("doc_id")).as("split"))
     val withSplits = pairs
       .join(splits.select(col("doc_id").as("doc_a"), col("split").as("split_a")),
         Seq("doc_a"))
@@ -1738,7 +1623,7 @@ object Dedup {
   def dedupSavings(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir).select(col("doc_id"),
       col("source"),
-      md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")).as("h"),
+      md5(normText).as("h"),
       size(split(lower(trim(col("text"))), "\\s+")).cast("long")
         .as("ntok"))
     val keep = d.groupBy(col("h")).agg(min(col("doc_id")).as("keep_id"))

@@ -531,9 +531,7 @@ object Multimodal {
     graft.sources.FormatIO.writeBucketed(
       phashBands(hashes).withColumn("epoch", lit(0L)),
       s"${name}_bands", "band_key", nBuckets, sortCol = Some("band_key"))
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "doc_id")
-    graft.sources.FormatIO.initIndexEpoch(spark, name)
+    graft.sources.FormatIO.initIndex(spark, name, "doc_id")
   }
 
   /** Probe the persisted pHash index with a batch of (doc_id, phash)
@@ -550,9 +548,7 @@ object Multimodal {
     val probe = phashBands(newHashes)
       .select(col("doc_id"), col("phash").as("ha"),
         col("band_key"), col("band_id"), col("band_sig"))
-    val index = graft.sources.FormatIO.pinnedAt(spark, s"${name}_bands", pin)
-      .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_tombstones",
-        pin), Seq("doc_id"), "left_anti")
+    val index = graft.sources.FormatIO.liveAt(spark, name, s"${name}_bands", pin)
       .select(col("doc_id").as("idx_doc"), col("phash").as("hb"),
         col("band_key"), col("band_id"), col("band_sig"))
     // no terminal orderBy: library probe, presentation order is the
@@ -584,28 +580,17 @@ object Multimodal {
     graft.sources.FormatIO.commitIndexEpoch(spark, name, e)
   }
 
-  /** TOMBSTONE-DELETE media docs from the persisted pHash index — same
-    * erasure contract as the MinHash family: immediate logical delete
-    * at O(deleted ids), bytes reclaimed by [[purgePhashTombstones]]. */
+  /** TOMBSTONE-DELETE media docs from the persisted pHash index — one
+    * [[graft.sources.FormatIO.deleteWave]], bytes reclaimed by
+    * [[purgePhashTombstones]]. */
   def deleteFromPhashIndex(spark: SparkSession, name: String,
-      docIds: DataFrame): Unit = {
-    val e = graft.sources.FormatIO.stageIndexEpoch(spark, name,
-      Seq(s"${name}_tombstones"))
-    graft.sources.FormatIO.appendTombstones(spark,
-      docIds.select(col("doc_id")).distinct().withColumn("epoch", lit(e)),
-      s"${name}_tombstones")
-    graft.sources.FormatIO.commitIndexEpoch(spark, name, e)
-  }
+      docIds: DataFrame): Unit =
+    graft.sources.FormatIO.deleteWave(spark, name, docIds.select(col("doc_id")))
 
   /** Physically erase tombstoned docs' band rows (bucket-preserving
-    * rewrite, doubles as a compaction); reset the tombstones. */
+    * rewrite, doubles as a compaction). */
   def purgePhashTombstones(spark: SparkSession, name: String)
-      : graft.sources.FormatIO.TableCompactStats = {
-    val tomb = spark.table(s"${name}_tombstones").localCheckpoint()
-    val stats = graft.sources.FormatIO.purgeBucketedTable(spark,
-      s"${name}_bands", tomb, "doc_id")
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "doc_id")
-    stats
-  }
+      : graft.sources.FormatIO.TableCompactStats =
+    graft.sources.FormatIO.purgeTombstones(spark, name,
+      Seq(s"${name}_bands")).head
 }

@@ -191,15 +191,9 @@ object Pipeline {
     // frames back on; the former doc_b join ALSO re-referenced the
     // un-materialized probe subtree, running its candidate join +
     // verify twice per increment (aliases defeat ReuseExchange)
-    def splitOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-      val nibble = substring(md5(c.cast("string")), 1, 1)
-      when(nibble.isin("0", "1"), "test")
-        .when(nibble.isin("2", "3"), "val")
-        .otherwise("train")
-    }
     val leakVsCorpus = bothDir
-      .filter(splitOf(col("doc_a")) === "train" &&
-        splitOf(col("doc_b")) === "test")
+      .filter(Sampling.splitOf(col("doc_a")) === "train" &&
+        Sampling.splitOf(col("doc_b")) === "test")
       .select(col("doc_a").as("doc_id"))
     val drops = corpusExact
       .unionByName(nearHit)

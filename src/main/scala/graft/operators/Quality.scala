@@ -77,8 +77,7 @@ object Quality {
   def sourceSimilarity(spark: SparkSession, dir: String): DataFrame = {
     val sigs = Tables.documents(spark, dir)
       .select(col("source"),
-        minhashSignature(rollingShingles(
-          regexp_replace(lower(trim(col("text"))), "\\s+", " "), 8), 32)
+        minhashSignature(rollingShingles(normText, 8), 32)
           .as("sig"))
       .groupBy(col("source"))
       .agg(Aggregates.groupMinhash(col("sig"), 32).as("gsig"))

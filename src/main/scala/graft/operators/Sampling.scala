@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.HashExpressions.normToks
 import graft.sources.Tables
 
 /** Sampling and split-assignment operators. The workhorse is
@@ -12,15 +13,19 @@ import graft.sources.Tables
   */
 object Sampling {
 
-  /** Deterministic split assignment from the first hex nibble of
-    * md5(key): 16 equal slices mapped to train/val/test (12/2/2). */
-  def hashSplit(df: DataFrame, keyCol: String): DataFrame = {
-    val nibble = substring(md5(col(keyCol).cast("string")), 1, 1)
-    df.withColumn("split",
-      when(nibble.isin("0", "1"), "test")
-        .when(nibble.isin("2", "3"), "val")
-        .otherwise("train"))
+  /** The split of key `c` from the first hex nibble of md5(key): 16
+    * equal slices mapped to train/val/test (12/2/2). Row-local, so
+    * callers apply it to pair columns directly. */
+  def splitOf(c: Column): Column = {
+    val nibble = substring(md5(c.cast("string")), 1, 1)
+    when(nibble.isin("0", "1"), "test")
+      .when(nibble.isin("2", "3"), "val")
+      .otherwise("train")
   }
+
+  /** `df` with a `split` column: [[splitOf]] its `keyCol`. */
+  def hashSplit(df: DataFrame, keyCol: String): DataFrame =
+    df.withColumn("split", splitOf(col(keyCol)))
 
   /** Split-assignment audit: per (split, lang) document counts. */
   def splitCounts(spark: SparkSession, dir: String): DataFrame =
@@ -275,8 +280,7 @@ object Sampling {
     * aggregate: linear scan at any corpus size. */
   def lengthBuckets(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(size(split(regexp_replace(lower(trim(col("text"))), "\\s+", " "),
-        " ")).cast("long").as("n"))
+      .select(size(normToks).cast("long").as("n"))
       .withColumn("len_bucket", when(col("n") <= 1, 1L)
         .otherwise(expr("shiftleft(CAST(1 AS BIGINT), length(bin(n - 1)))")))
       .groupBy(col("len_bucket"))

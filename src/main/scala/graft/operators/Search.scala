@@ -161,77 +161,47 @@ object Search {
     // [[appendToSearchIndex]] adds another, so probes derive
     // avgdl = ΣΣdl / Σn on read — exact (dl is a whole number, the sums
     // never leave the 2^53 integer-exact range at any plausible corpus)
-    lens.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .withColumn("epoch", lit(0L))
-      .write.format("parquet").mode("overwrite").saveAsTable(s"${name}_stats")
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "doc_id")
-    graft.sources.FormatIO.initIndexEpoch(spark, name)
+    graft.sources.FormatIO.writeSegment(spark, s"${name}_stats",
+      lens.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")), 0L,
+      replace = true)
+    graft.sources.FormatIO.initIndex(spark, name, "doc_id")
   }
 
-  /** The index's postings with tombstoned documents anti-joined out —
+  /** The index's live postings ([[graft.sources.FormatIO.liveAt]]) —
     * both probes read through this, which keeps df (derived by
     * COUNTING matched postings) automatically consistent with
-    * deletions. Pinned at the probe's epoch so a concurrent
-    * append/delete wave is invisible until its commit. */
+    * deletions. */
   private def livePostings(spark: SparkSession, name: String,
       pin: Long): DataFrame =
-    graft.sources.FormatIO.pinnedAt(spark, s"${name}_postings", pin)
-      .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_tombstones",
-        pin), Seq("doc_id"), "left_anti")
+    graft.sources.FormatIO.liveAt(spark, name, s"${name}_postings", pin)
 
-  /** TOMBSTONE-DELETE documents from the persisted BM25 index — same
-    * contract as [[graft.operators.Dedup.deleteFromMinhashIndex]]:
-    * probes anti-join the tombstones (and because BM25 df is counted
-    * from matched postings, idf is live-exact immediately), and a
-    * NEGATIVE (count, Σdl) moment segment derived from the index's own
-    * lens rows keeps the merged avgdl exact. Idempotent — retried
-    * deletes skip already-tombstoned ids. */
+  /** TOMBSTONE-DELETE documents from the persisted BM25 index — a
+    * [[graft.sources.FormatIO.deleteWave]]: because BM25 df is counted
+    * from live postings, idf is exact at once, and the wave's NEGATIVE
+    * (count, Σdl) moment segment, derived from the index's own lens
+    * rows, keeps the merged avgdl exact. */
   def deleteFromSearchIndex(spark: SparkSession, name: String,
-      docIds: DataFrame): Unit = {
-    // idempotency anti-joins the RAW tombstones; this wave's own rows
-    // are epoch-gated so the stats delta and the tombstones publish to
-    // pinned probes in one commit (no torn hidden-doc/stale-avgdl read)
-    val fresh = docIds.select(col("doc_id")).distinct()
-      .join(spark.table(s"${name}_tombstones"), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    val e = graft.sources.FormatIO.stageIndexEpoch(spark, name,
-      Seq(s"${name}_stats", s"${name}_tombstones"))
-    spark.table(s"${name}_lens")
-      .join(fresh, Seq("doc_id"), "left_semi")
-      .agg((-count(lit(1))).as("n_docs"),
-        (-coalesce(sum(col("dl")), lit(0.0))).as("sum_dl"))
-      .withColumn("epoch", lit(e))
-      .write.format("parquet").mode("append").saveAsTable(s"${name}_stats")
-    spark.catalog.refreshTable(s"${name}_stats")
-    graft.sources.FormatIO.appendTombstones(spark,
-      fresh.withColumn("epoch", lit(e)), s"${name}_tombstones")
-    graft.sources.FormatIO.commitIndexEpoch(spark, name, e)
-  }
+      docIds: DataFrame): Unit =
+    graft.sources.FormatIO.deleteWave(spark, name, docIds.select(col("doc_id")),
+      Seq(s"${name}_stats"), (fresh, e) =>
+        graft.sources.FormatIO.writeSegment(spark, s"${name}_stats",
+          spark.table(s"${name}_lens").join(fresh, Seq("doc_id"), "left_semi")
+            .agg((-count(lit(1))).as("n_docs"),
+              (-coalesce(sum(col("dl")), lit(0.0))).as("sum_dl")), e))
 
-  /** Physically erase tombstoned documents' postings and lens rows;
+  /** Physically erase tombstoned documents' postings and lens rows and
     * rebuild the stats relation from the purged lens (one exact
-    * segment collapsing all appends and deletes); reset the
-    * tombstones. */
+    * segment collapsing all appends and deletes, tagged at the
+    * committed epoch so pinned probes keep reading it); returns the
+    * postings table's stats. */
   def purgeSearchTombstones(spark: SparkSession, name: String)
-      : graft.sources.FormatIO.TableCompactStats = {
-    val tomb = spark.table(s"${name}_tombstones").localCheckpoint()
-    val stats = graft.sources.FormatIO.purgeBucketedTable(spark,
-      s"${name}_postings", tomb, "doc_id")
-    graft.sources.FormatIO.purgeBucketedTable(spark, s"${name}_lens",
-      tomb, "doc_id")
-    // the rebuilt stats collapse every segment into one, tagged at the
-    // CURRENT committed epoch so pinned probes keep reading them
-    spark.table(s"${name}_lens")
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .withColumn("epoch",
-        lit(graft.sources.FormatIO.committedEpoch(spark, name)))
-      .write.format("parquet").mode("overwrite").saveAsTable(s"${name}_stats")
-    spark.catalog.refreshTable(s"${name}_stats")
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "doc_id")
-    stats
-  }
+      : graft.sources.FormatIO.TableCompactStats =
+    graft.sources.FormatIO.purgeTombstones(spark, name,
+      Seq(s"${name}_postings", s"${name}_lens"), pin =>
+        graft.sources.FormatIO.writeSegment(spark, s"${name}_stats",
+          spark.table(s"${name}_lens")
+            .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")),
+          pin, replace = true)).head
 
   /** The 1-row merged corpus stats (n_docs, avgdl) from the
     * log-structured `_stats` segments. A fully-tombstoned index sums
@@ -277,10 +247,8 @@ object Search {
       s"${name}_postings")
     graft.sources.FormatIO.appendBucketed(spark,
       lens.withColumn("epoch", lit(e)), s"${name}_lens")
-    lens.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .withColumn("epoch", lit(e))
-      .write.format("parquet").mode("append").saveAsTable(s"${name}_stats")
-    spark.catalog.refreshTable(s"${name}_stats") // see FormatIO.appendBucketed
+    graft.sources.FormatIO.writeSegment(spark, s"${name}_stats",
+      lens.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")), e)
     graft.sources.FormatIO.commitIndexEpoch(spark, name, e)
   }
 
@@ -530,9 +498,7 @@ object Search {
     graft.sources.FormatIO.writeBucketed(
       positionalPostings(docs).withColumn("epoch", lit(0L)),
       s"${name}_postings", "tok", nBuckets, sortCol = Some("tok"))
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "doc_id")
-    graft.sources.FormatIO.initIndexEpoch(spark, name)
+    graft.sources.FormatIO.initIndex(spark, name, "doc_id")
   }
 
   /** PHRASE PROBE against the positional index: each phrase term pulls
@@ -548,9 +514,8 @@ object Search {
       phrase: Seq[String] = DefaultPhrase): DataFrame = {
     require(phrase.nonEmpty, "empty phrase")
     val pin = graft.sources.FormatIO.committedEpoch(spark, name)
-    val live = graft.sources.FormatIO.pinnedAt(spark, s"${name}_postings", pin)
-      .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_tombstones",
-        pin), Seq("doc_id"), "left_anti")
+    val live = graft.sources.FormatIO
+      .liveAt(spark, name, s"${name}_postings", pin)
     val slices = phrase.zipWithIndex.map { case (w, j) =>
       live.filter(col("tok") === lit(w))
         .select(col("doc_id"), (col("pos") - lit(j.toLong)).as("anchor"))
@@ -573,27 +538,16 @@ object Search {
     graft.sources.FormatIO.commitIndexEpoch(spark, name, e)
   }
 
-  /** TOMBSTONE-DELETE docs from the positional index — the family's
-    * standard O(deleted ids) logical erase. */
+  /** TOMBSTONE-DELETE docs from the positional index — one
+    * [[graft.sources.FormatIO.deleteWave]]. */
   def deleteFromPositionalIndex(spark: SparkSession, name: String,
-      docIds: DataFrame): Unit = {
-    val e = graft.sources.FormatIO.stageIndexEpoch(spark, name,
-      Seq(s"${name}_tombstones"))
-    graft.sources.FormatIO.appendTombstones(spark,
-      docIds.select(col("doc_id")).distinct().withColumn("epoch", lit(e)),
-      s"${name}_tombstones")
-    graft.sources.FormatIO.commitIndexEpoch(spark, name, e)
-  }
+      docIds: DataFrame): Unit =
+    graft.sources.FormatIO.deleteWave(spark, name, docIds.select(col("doc_id")))
 
   /** Physically erase tombstoned docs' postings (bucket-preserving
-    * rewrite + compaction); reset the tombstones. */
+    * rewrite + compaction). */
   def purgePositionalTombstones(spark: SparkSession, name: String)
-      : graft.sources.FormatIO.TableCompactStats = {
-    val tomb = spark.table(s"${name}_tombstones").localCheckpoint()
-    val stats = graft.sources.FormatIO.purgeBucketedTable(spark,
-      s"${name}_postings", tomb, "doc_id")
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "doc_id")
-    stats
-  }
+      : graft.sources.FormatIO.TableCompactStats =
+    graft.sources.FormatIO.purgeTombstones(spark, name,
+      Seq(s"${name}_postings")).head
 }

@@ -349,37 +349,33 @@ object Similarity {
     graft.sources.FormatIO.writeBucketed(
       postings.withColumn("epoch", lit(0L)), s"${name}_postings",
       "bucket", nBuckets, sortCol = Some("bucket"))
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "id_b")
-    graft.sources.FormatIO.initIndexEpoch(spark, name)
+    graft.sources.FormatIO.initIndex(spark, name, "id_b")
   }
 
-  /** TOMBSTONE-DELETE vectors from the persisted IVF index — same
-    * contract as [[graft.operators.Dedup.deleteFromMinhashIndex]].
-    * The frozen codebook is untouched (deletion, like append, never
-    * retrains — retraining is by definition a rebuild). */
+  /** TOMBSTONE-DELETE vectors from the persisted IVF index — one
+    * [[graft.sources.FormatIO.deleteWave]]. The frozen codebook is
+    * untouched (deletion, like append, never retrains — retraining is
+    * by definition a rebuild). */
   def deleteFromIvfIndex(spark: SparkSession, name: String,
-      vecIds: DataFrame): Unit = {
-    val e = graft.sources.FormatIO.stageIndexEpoch(spark, name,
-      Seq(s"${name}_tombstones"))
-    graft.sources.FormatIO.appendTombstones(spark,
-      vecIds.select(col("vec_id").as("id_b")).distinct()
-        .withColumn("epoch", lit(e)),
-      s"${name}_tombstones")
-    graft.sources.FormatIO.commitIndexEpoch(spark, name, e)
-  }
+      vecIds: DataFrame): Unit =
+    graft.sources.FormatIO.deleteWave(spark, name,
+      vecIds.select(col("vec_id").as("id_b")))
 
-  /** Physically erase tombstoned vectors' postings; reset the
-    * tombstones. */
+  /** Physically erase tombstoned vectors' postings. */
   def purgeIvfTombstones(spark: SparkSession, name: String)
-      : graft.sources.FormatIO.TableCompactStats = {
-    val tomb = spark.table(s"${name}_tombstones").localCheckpoint()
-    val stats = graft.sources.FormatIO.purgeBucketedTable(spark,
-      s"${name}_postings", tomb, "id_b")
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "id_b")
-    stats
-  }
+      : graft.sources.FormatIO.TableCompactStats =
+    graft.sources.FormatIO.purgeTombstones(spark, name,
+      Seq(s"${name}_postings")).head
+
+  /** The live postings of IVF-family index `name` at `pin`: the
+    * generation `pin`'s rebase cut opens
+    * ([[graft.sources.FormatIO.pinnedSince]]), tombstoned vectors
+    * anti-joined out. */
+  private def liveGeneration(spark: SparkSession, name: String,
+      pin: Long): DataFrame =
+    graft.sources.FormatIO.live(spark, name, pin,
+      graft.sources.FormatIO.pinnedSince(spark, s"${name}_postings",
+        graft.sources.FormatIO.rebaseEpochOf(spark, name, pin), pin))
 
   /** IVF CODEBOOK-STALENESS PROBE: sampled recall of the LIVE index
     * against exact search over the same live vectors. Appends and
@@ -402,11 +398,7 @@ object Similarity {
       sampleN: Int = 64): DataFrame = {
     import spark.implicits._
     val pin = graft.sources.FormatIO.committedEpoch(spark, name)
-    val live = graft.sources.FormatIO.pinnedSince(spark,
-        s"${name}_postings",
-        graft.sources.FormatIO.rebaseEpochOf(spark, name, pin), pin)
-      .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_tombstones",
-        pin), Seq("id_b"), "left_anti")
+    val live = liveGeneration(spark, name, pin)
       .select(col("id_b"), col("vb"))
       .localCheckpoint()
     val sample = graft.operators.Sampling.md5TopN(live, "id_b", sampleN)
@@ -551,11 +543,7 @@ object Similarity {
       nCentroids: Int = 16, kmeansIters: Int = 3): Long = {
     import spark.implicits._
     val pin = graft.sources.FormatIO.committedEpoch(spark, name)
-    val live = graft.sources.FormatIO.pinnedSince(spark,
-        s"${name}_postings",
-        graft.sources.FormatIO.rebaseEpochOf(spark, name, pin), pin)
-      .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_tombstones",
-        pin), Seq("id_b"), "left_anti")
+    val live = liveGeneration(spark, name, pin)
       .select(col("id_b").as("vec_id"), col("vb").as("vn"))
       .localCheckpoint()
     val centroids = trainCentroids(spark, live, nCentroids, kmeansIters)
@@ -627,12 +615,7 @@ object Similarity {
            |    (d, i) -> struct(-d AS nd, i AS idx))), 1, $nProbe),
            |  s -> CAST(s.idx AS BIGINT))""".stripMargin)))
       .select(col("vec_id").as("id_a"), col("vn").as("va"), col("bucket"))
-    val indexed = graft.sources.FormatIO.pinnedSince(spark,
-        s"${name}_postings",
-        graft.sources.FormatIO.rebaseEpochOf(spark, name, pin), pin)
-      // tombstoned vectors are logically deleted until the purge
-      .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_tombstones",
-        pin), Seq("id_b"), "left_anti")
+    val indexed = liveGeneration(spark, name, pin)
     val w = Window.partitionBy(col("id_a")).orderBy(col("cos").desc, col("id_b"))
     probed.join(indexed, Seq("bucket"))
       .filter(col("id_a") =!= col("id_b"))
@@ -1494,9 +1477,7 @@ object Similarity {
       normed.select(col("vec_id").as("id_b"), col("vn").as("vb"))
         .withColumn("epoch", lit(0L)),
       s"${name}_vecs", "id_b", nBuckets, sortCol = Some("id_b"))
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "id_b")
-    graft.sources.FormatIO.initIndexEpoch(spark, name)
+    graft.sources.FormatIO.initIndex(spark, name, "id_b")
   }
 
   /** DELTA APPEND into the IVF-PQ index: bucket under the frozen IVF
@@ -1543,31 +1524,19 @@ object Similarity {
   }
 
   /** TOMBSTONE-DELETE from the IVF-PQ index — postings AND the vector
-    * side table share one tombstone set (both read through the same
-    * anti-join). */
+    * side table share one tombstone set (both are read live). */
   def deleteFromIvfPqIndex(spark: SparkSession, name: String,
-      vecIds: DataFrame): Unit = {
-    val e = graft.sources.FormatIO.stageIndexEpoch(spark, name,
-      Seq(s"${name}_tombstones"))
-    graft.sources.FormatIO.appendTombstones(spark,
-      vecIds.select(col("vec_id").as("id_b")).distinct()
-        .withColumn("epoch", lit(e)),
-      s"${name}_tombstones")
-    graft.sources.FormatIO.commitIndexEpoch(spark, name, e)
-  }
+      vecIds: DataFrame): Unit =
+    graft.sources.FormatIO.deleteWave(spark, name,
+      vecIds.select(col("vec_id").as("id_b")))
 
   /** Physically erase tombstoned entries from postings and the vector
-    * side table; reset the tombstones. */
+    * side table. */
   def purgeIvfPqTombstones(spark: SparkSession, name: String)
       : (graft.sources.FormatIO.TableCompactStats,
         graft.sources.FormatIO.TableCompactStats) = {
-    val tomb = spark.table(s"${name}_tombstones").localCheckpoint()
-    val p = graft.sources.FormatIO.purgeBucketedTable(spark,
-      s"${name}_postings", tomb, "id_b")
-    val v = graft.sources.FormatIO.purgeBucketedTable(spark,
-      s"${name}_vecs", tomb, "id_b")
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "id_b")
+    val Seq(p, v) = graft.sources.FormatIO.purgeTombstones(spark, name,
+      Seq(s"${name}_postings", s"${name}_vecs"))
     (p, v)
   }
 
@@ -1601,9 +1570,7 @@ object Similarity {
       pqIters: Int, residual: Boolean = true): Long = {
     import spark.implicits._
     val pin = graft.sources.FormatIO.committedEpoch(spark, name)
-    val live = graft.sources.FormatIO.pinnedAt(spark, s"${name}_vecs", pin)
-      .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_tombstones",
-        pin), Seq("id_b"), "left_anti")
+    val live = graft.sources.FormatIO.liveAt(spark, name, s"${name}_vecs", pin)
       .select(col("id_b").as("vec_id"), col("vb").as("vn"))
       .localCheckpoint()
     val centroids = trainCentroids(spark, live, nCentroids, kmeansIters)
@@ -1728,11 +1695,7 @@ object Similarity {
         else lit(0.0))
       .select(col("vec_id").as("id_a") +: col("vn").as("va") +:
         col("bucket") +: col("cdot") +: (0 until m).map(i => col(s"t$i")): _*)
-    val indexed = graft.sources.FormatIO.pinnedSince(spark,
-        s"${name}_postings",
-        graft.sources.FormatIO.rebaseEpochOf(spark, name, pin), pin)
-      .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_tombstones",
-        pin), Seq("id_b"), "left_anti")
+    val indexed = liveGeneration(spark, name, pin)
     val cut = if (rerank > 0) math.max(rerank, k) else k
     val w = Window.partitionBy(col("id_a"))
       .orderBy(col("adc").desc, col("id_b"))
@@ -1792,9 +1755,7 @@ object Similarity {
       sampleN: Int = 64): DataFrame = {
     import spark.implicits._
     val pin = graft.sources.FormatIO.committedEpoch(spark, name)
-    val live = graft.sources.FormatIO.pinnedAt(spark, s"${name}_vecs", pin)
-      .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_tombstones",
-        pin), Seq("id_b"), "left_anti")
+    val live = graft.sources.FormatIO.liveAt(spark, name, s"${name}_vecs", pin)
       .select(col("id_b"), col("vb"))
       .localCheckpoint()
     val sample = graft.operators.Sampling.md5TopN(live, "id_b", sampleN)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.functions.HashExpressions.normToks
 import graft.sources.Tables
 
 /** Distributed SUFFIX RANKING by prefix doubling, and the exact
@@ -34,11 +35,6 @@ object Suffix {
     * [[clipOracleSql]]) derive from, so the two sides cannot drift
     * (the fdAudit shared-constant pattern, Profiling.scala). */
   val SpanMinLen = 8
-
-  /** Normalized whitespace tokens — the exact tokenization the DuckDB
-    * oracles mirror (same expression as Dedup's). */
-  private def normToks: Column =
-    split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
 
   /** Dense 1-based lexicographic ids for the distinct values of
     * `keys`' columns: distinct → range-partitioned sort → RDD

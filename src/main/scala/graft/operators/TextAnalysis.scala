@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.HashExpressions.{normText, normToks}
 import graft.sources.Tables
 
 /** Text-analysis operators over `documents` (SURVEY §2c 32-35). All are
@@ -440,7 +441,7 @@ object TextAnalysis {
   def fingerprint(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")).as("fingerprint"))
+        md5(normText).as("fingerprint"))
       .orderBy(col("doc_id"))
 
   /** Benchmark-contamination detection (the decontamination step every
@@ -930,11 +931,10 @@ object TextAnalysis {
     // Identical output: md5-hex[0,16) window digests, sliding-w minima,
     // first-occurrence distinct; docs under k tokens drop at the guard.
     import graft.functions.HashExpressions.{gramDigests, winnowMins}
-    val toks = split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
     docs
       .select(col("doc_id"),
-        when(size(toks) >= k,
-          winnowMins(gramDigests(toks, k, 16), w)).as("fps"))
+        when(size(normToks) >= k,
+          winnowMins(gramDigests(normToks, k, 16), w)).as("fps"))
       .filter(col("fps").isNotNull)
       .select(col("doc_id"), explode(col("fps")).as("fp"))
   }
@@ -992,79 +992,37 @@ object TextAnalysis {
       fps.withColumnRenamed("doc_id", "idx_doc")
         .withColumn("epoch", lit(0L)), s"${name}_fps",
       "fp", nBuckets, sortCol = Some("fp"))
-    fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      .withColumn("epoch", lit(0L))
-      .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .saveAsTable(s"${name}_fpdf")
+    graft.sources.FormatIO.writeSegment(spark, s"${name}_fpdf",
+      graft.sources.FormatIO.dfCounts(fps, "fp"), 0L, replace = true)
     import spark.implicits._
     Seq((k, w, maxFpDf)).toDF("k", "w", "max_fp_df")
       .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Overwrite)
       .saveAsTable(s"${name}_meta")
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "idx_doc")
-    graft.sources.FormatIO.initIndexEpoch(spark, name)
+    graft.sources.FormatIO.initIndex(spark, name, "idx_doc")
   }
 
-  /** TOMBSTONE-DELETE documents from the persisted winnow index (the
-    * erasure op — same contract as `Dedup.deleteFromMinhashIndex`):
-    * ids land in the probe-anti-joined side-table AND a NEGATIVE df
-    * segment derived from the index's OWN postings appends to the
-    * log-structured fp-df relation — the merge-on-read sum then
-    * reports each fingerprint's live document frequency exactly, so
-    * the df cap reflects deletions (a boilerplate fp whose carriers
-    * were erased re-enters candidate generation the moment its live
-    * df drops under the cap). Deriving the negative segment from the
-    * index means the deleted documents' TEXT is not needed — erasure
-    * works after the source rows are gone. Idempotent: already-
-    * tombstoned ids are skipped, so a retried delete cannot
-    * double-subtract. Re-appending a tombstoned doc_id is unsupported
-    * (monotone never-reused ids — the corpus convention). */
+  /** TOMBSTONE-DELETE documents from the persisted winnow index — a
+    * [[graft.sources.FormatIO.deleteWave]] whose compensating segment
+    * is a NEGATIVE df segment derived from the index's OWN postings, so
+    * the merged fp-df reports each fingerprint's live document
+    * frequency exactly and the df cap reflects deletions (a
+    * boilerplate fp whose carriers were erased re-enters candidate
+    * generation the moment its live df drops under the cap). */
   def deleteFromWinnowIndex(spark: SparkSession, name: String,
-      docIds: DataFrame): Unit = {
-    // idempotency reads the RAW tombstones; the wave's own rows are
-    // epoch-gated so the negative df segment and the tombstones reach
-    // pinned probes in one commit
-    val fresh = docIds.select(col("doc_id").as("idx_doc")).distinct()
-      .join(spark.table(s"${name}_tombstones"), Seq("idx_doc"), "left_anti")
-      .localCheckpoint()
-    val e = graft.sources.FormatIO.stageIndexEpoch(spark, name,
-      Seq(s"${name}_fpdf", s"${name}_tombstones"))
-    spark.table(s"${name}_fps")
-      .join(fresh, Seq("idx_doc"), "left_semi")
-      .groupBy(col("fp")).agg((-count(lit(1))).as("df"))
-      .withColumn("epoch", lit(e))
-      .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Append)
-      .saveAsTable(s"${name}_fpdf")
-    spark.catalog.refreshTable(s"${name}_fpdf")
-    graft.sources.FormatIO.appendTombstones(spark,
-      fresh.withColumn("epoch", lit(e)), s"${name}_tombstones")
-    graft.sources.FormatIO.commitIndexEpoch(spark, name, e)
-  }
+      docIds: DataFrame): Unit =
+    graft.sources.FormatIO.deleteWave(spark, name,
+      docIds.select(col("doc_id").as("idx_doc")), Seq(s"${name}_fpdf"),
+      graft.sources.FormatIO.subtractDf(spark, s"${name}_fpdf",
+        s"${name}_fps", "fp"))
 
-  /** Physically erase tombstoned documents from the winnow index:
-    * bucket-preserving purge of the fp postings, then the df relation
-    * is REBUILT from the purged postings (collapsing every append and
-    * negative-delete segment into one exact relation — the compaction
-    * of the log structure), and the tombstone table resets. */
+  /** Physically erase tombstoned documents from the fp postings and
+    * collapse the fp-df log into one segment counted from the purged
+    * postings. */
   def purgeWinnowTombstones(spark: SparkSession, name: String)
-      : graft.sources.FormatIO.TableCompactStats = {
-    val tomb = spark.table(s"${name}_tombstones").localCheckpoint()
-    val stats = graft.sources.FormatIO.purgeBucketedTable(spark,
-      s"${name}_fps", tomb, "idx_doc")
-    // the rebuilt df collapses every segment into one, tagged at the
-    // CURRENT committed epoch so pinned probes keep reading it
-    spark.table(s"${name}_fps")
-      .groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      .withColumn("epoch",
-        lit(graft.sources.FormatIO.committedEpoch(spark, name)))
-      .localCheckpoint() // materialize BEFORE overwriting the table read
-      .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .saveAsTable(s"${name}_fpdf")
-    spark.catalog.refreshTable(s"${name}_fpdf")
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "idx_doc")
-    stats
-  }
+      : graft.sources.FormatIO.TableCompactStats =
+    graft.sources.FormatIO.purgeTombstones(spark, name, Seq(s"${name}_fps"),
+      graft.sources.FormatIO.rebuildDfLog(spark, s"${name}_fpdf",
+        s"${name}_fps", "fp", _)).head
 
   /** Probe the persisted winnow index with a batch of documents
     * (`doc_id`, `text`): directed (probe doc → index doc) pairs
@@ -1085,17 +1043,13 @@ object TextAnalysis {
     // one pin for fps + fpdf + tombstones (FormatIO index epochs)
     val pin = graft.sources.FormatIO.committedEpoch(spark, name)
     val probe = winnowFpsOf(newDocs, k, w).localCheckpoint()
-    val probeFps = probe.select(col("fp")).distinct()
-    val dfreq = graft.sources.FormatIO.pinnedAt(spark, s"${name}_fpdf", pin)
-      .join(probeFps, Seq("fp"), "left_semi")
-      .groupBy(col("fp")).agg(sum(col("df")).as("df"))
+    val dfreq = graft.sources.FormatIO.readDfLog(spark, s"${name}_fpdf", pin,
+      probe.select(col("fp")).distinct())
     val rare = dfreq.filter(col("df") <= maxFpDf).select(col("fp"))
+    // live postings: a deleted doc's df mass is already subtracted by
+    // its delete's negative segment
     probe.join(rare, Seq("fp"), "left_semi")
-      .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_fps", pin)
-        // tombstoned docs are logically deleted until the purge; their
-        // df mass is already subtracted by the delete's negative segment
-        .join(graft.sources.FormatIO.pinnedAt(spark, s"${name}_tombstones",
-          pin), Seq("idx_doc"), "left_anti"),
+      .join(graft.sources.FormatIO.liveAt(spark, name, s"${name}_fps", pin),
         Seq("fp"))
       .filter(col("doc_id") =!= col("idx_doc"))
       .groupBy(col("doc_id"), col("idx_doc"))
@@ -1131,11 +1085,8 @@ object TextAnalysis {
     graft.sources.FormatIO.appendBucketed(spark,
       fps.withColumnRenamed("doc_id", "idx_doc")
         .withColumn("epoch", lit(e)), s"${name}_fps")
-    fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      .withColumn("epoch", lit(e))
-      .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Append)
-      .saveAsTable(s"${name}_fpdf")
-    spark.catalog.refreshTable(s"${name}_fpdf") // see FormatIO.appendBucketed
+    graft.sources.FormatIO.writeSegment(spark, s"${name}_fpdf",
+      graft.sources.FormatIO.dfCounts(fps, "fp"), e)
     graft.sources.FormatIO.commitIndexEpoch(spark, name, e)
   }
 
@@ -1338,15 +1289,9 @@ object TextAnalysis {
         .agg(count(lit(1)).as("tf"))
         .withColumn("epoch", lit(0L)),
       s"${name}_postings", "gram", nBuckets, sortCol = Some("gram"))
-    spark.table(s"${name}_postings")
-      .groupBy(col("gram")).agg(count(lit(1)).as("df"))
-      .withColumn("epoch", lit(0L))
-      .localCheckpoint()
-      .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .saveAsTable(s"${name}_gramdf")
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "idx_doc")
-    graft.sources.FormatIO.initIndexEpoch(spark, name)
+    graft.sources.FormatIO.rebuildDfLog(spark, s"${name}_gramdf",
+      s"${name}_postings", "gram", 0L)
+    graft.sources.FormatIO.initIndex(spark, name, "idx_doc")
   }
 
   /** DELTA APPEND a batch of new (doc_id, text) rows into the persisted
@@ -1371,67 +1316,33 @@ object TextAnalysis {
       .agg(count(lit(1)).as("tf")).localCheckpoint()
     graft.sources.FormatIO.appendBucketed(spark,
       posts.withColumn("epoch", lit(e)), s"${name}_postings")
-    posts.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-      .withColumn("epoch", lit(e))
-      .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Append)
-      .saveAsTable(s"${name}_gramdf")
-    spark.catalog.refreshTable(s"${name}_gramdf") // see FormatIO.appendBucketed
+    graft.sources.FormatIO.writeSegment(spark, s"${name}_gramdf",
+      graft.sources.FormatIO.dfCounts(posts, "gram"), e)
     graft.sources.FormatIO.commitIndexEpoch(spark, name, e)
   }
 
-  /** TOMBSTONE-DELETE documents from the persisted LM index — the
-    * erasure contract of the other families: a NEGATIVE df segment
-    * derived from the index's OWN postings joins the log, so a gram
-    * whose every live carrier is deleted reaches merged df 0 and
-    * immediately stops resolving probe positions (the model forgets
-    * the erased text with no rebuild). Idempotent: already-tombstoned
-    * ids are skipped, a retried delete cannot double-subtract. */
+  /** TOMBSTONE-DELETE documents from the persisted LM index — a
+    * [[graft.sources.FormatIO.deleteWave]] whose NEGATIVE df segment,
+    * derived from the index's OWN postings, joins the log: a gram whose
+    * every live carrier is deleted reaches merged df 0 and immediately
+    * stops resolving probe positions (the model forgets the erased
+    * text with no rebuild). */
   def deleteFromLmIndex(spark: SparkSession, name: String,
-      docIds: DataFrame): Unit = {
-    // idempotency reads the RAW tombstones; the wave's own rows are
-    // epoch-gated so the negative df segment and the tombstones reach
-    // pinned probes in one commit
-    val fresh = docIds.select(col("doc_id").as("idx_doc")).distinct()
-      .join(spark.table(s"${name}_tombstones"), Seq("idx_doc"), "left_anti")
-      .localCheckpoint()
-    val e = graft.sources.FormatIO.stageIndexEpoch(spark, name,
-      Seq(s"${name}_gramdf", s"${name}_tombstones"))
-    spark.table(s"${name}_postings")
-      .join(fresh, Seq("idx_doc"), "left_semi")
-      .groupBy(col("gram")).agg((-count(lit(1))).as("df"))
-      .withColumn("epoch", lit(e))
-      .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Append)
-      .saveAsTable(s"${name}_gramdf")
-    spark.catalog.refreshTable(s"${name}_gramdf")
-    graft.sources.FormatIO.appendTombstones(spark,
-      fresh.withColumn("epoch", lit(e)), s"${name}_tombstones")
-    graft.sources.FormatIO.commitIndexEpoch(spark, name, e)
-  }
+      docIds: DataFrame): Unit =
+    graft.sources.FormatIO.deleteWave(spark, name,
+      docIds.select(col("doc_id").as("idx_doc")), Seq(s"${name}_gramdf"),
+      graft.sources.FormatIO.subtractDf(spark, s"${name}_gramdf",
+        s"${name}_postings", "gram"))
 
-  /** Physically erase tombstoned documents' postings, REBUILD the
-    * gram-df relation from the purged postings (one exact relation
-    * collapsing every append and negative segment — the log
-    * structure's compaction), reset the tombstones. Probe-invariant
-    * (spec-proved) with the bytes verifiably gone. */
+  /** Physically erase tombstoned documents' postings and collapse the
+    * gram-df log into one segment counted from the purged postings.
+    * Probe-invariant (spec-proved) with the bytes verifiably gone. */
   def purgeLmTombstones(spark: SparkSession, name: String)
-      : graft.sources.FormatIO.TableCompactStats = {
-    val tomb = spark.table(s"${name}_tombstones").localCheckpoint()
-    val stats = graft.sources.FormatIO.purgeBucketedTable(spark,
-      s"${name}_postings", tomb, "idx_doc")
-    // the rebuilt df collapses every segment into one, tagged at the
-    // CURRENT committed epoch so pinned probes keep reading it
-    spark.table(s"${name}_postings")
-      .groupBy(col("gram")).agg(count(lit(1)).as("df"))
-      .withColumn("epoch",
-        lit(graft.sources.FormatIO.committedEpoch(spark, name)))
-      .localCheckpoint() // materialize BEFORE overwriting the table read
-      .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .saveAsTable(s"${name}_gramdf")
-    spark.catalog.refreshTable(s"${name}_gramdf")
-    graft.sources.FormatIO.initTombstones(spark, s"${name}_tombstones",
-      "idx_doc")
-    stats
-  }
+      : graft.sources.FormatIO.TableCompactStats =
+    graft.sources.FormatIO.purgeTombstones(spark, name,
+      Seq(s"${name}_postings"),
+      graft.sources.FormatIO.rebuildDfLog(spark, s"${name}_gramdf",
+        s"${name}_postings", "gram", _)).head
 
   /** Probe the persisted LM index with a batch of documents (doc_id,
     * text): [[backoffLevelsOn]]'s per-document resolution profile
@@ -1456,10 +1367,8 @@ object TextAnalysis {
       .unionByName(test.select(col("g1").as("gram"))).distinct()
     // pinned (FormatIO index epochs): a concurrent append/delete wave
     // is invisible until its commit
-    val live = graft.sources.FormatIO.pinnedAt(spark, s"${name}_gramdf",
-        graft.sources.FormatIO.committedEpoch(spark, name))
-      .join(probeGrams, Seq("gram"), "left_semi")
-      .groupBy(col("gram")).agg(sum(col("df")).as("df"))
+    val live = graft.sources.FormatIO.readDfLog(spark, s"${name}_gramdf",
+        graft.sources.FormatIO.committedEpoch(spark, name), probeGrams)
       .filter(col("df") > 0)
     test
       .join(live.select(col("gram").as("g3"), lit(1).as("h3")),

@@ -103,30 +103,6 @@ object FormatIO {
     spark.catalog.refreshTable(table)
   }
 
-  /** Create an EMPTY tombstone side-table (bigint key + epoch) —
-    * index builds call this so probes can anti-join unconditionally.
-    * Tombstones carry the epoch column like every other index segment
-    * relation: a delete's tombstones must stay invisible to pinned
-    * probes until the SAME commit that publishes its compensating
-    * segments (negative df, stats deltas), or a mid-delete probe sees
-    * the doc hidden while its df mass still counts — the torn state
-    * the epoch protocol exists to exclude. */
-  def initTombstones(spark: SparkSession, table: String,
-      keyCol: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    spark.range(0).select(col("id").as(keyCol), col("id").as("epoch"))
-      .write.format("parquet").mode(SaveMode.Overwrite).saveAsTable(table)
-  }
-
-  /** Append keys to a tombstone side-table. The caller dedups against
-    * the existing tombstones where idempotency matters (the winnow
-    * delete must not double-append its negative df segment). */
-  def appendTombstones(spark: SparkSession, keys: DataFrame,
-      table: String): Unit = {
-    keys.write.format("parquet").mode(SaveMode.Append).saveAsTable(table)
-    spark.catalog.refreshTable(table) // see appendBucketed
-  }
-
   case class TableCompactStats(filesBefore: Long, filesAfter: Long)
 
   /** Bucket-PRESERVING compaction for an appended-to bucketed table —
@@ -142,25 +118,6 @@ object FormatIO {
     * this table quiesced. */
   def compactBucketedTable(spark: SparkSession, table: String): TableCompactStats =
     rewriteBucketedTable(spark, table, identity)
-
-  /** PHYSICAL PURGE of tombstoned rows from a bucketed table — the
-    * erasure half of the tombstone-deletion contract (see
-    * `Dedup.deleteFromMinhashIndex` /
-    * `TextAnalysis.deleteFromWinnowIndex`): logically-deleted rows are
-    * anti-joined out during the same bucket-preserving rewrite a
-    * compaction performs, so one maintenance pass folds append
-    * accretion AND physically erases deleted documents' postings
-    * (the right-to-erasure requirement — a tombstone hides data from
-    * probes immediately; the purge removes the bytes). Same
-    * crash-safe promotion and single-writer window as
-    * [[compactBucketedTable]]. */
-  def purgeBucketedTable(spark: SparkSession, table: String,
-      dropKeys: DataFrame, keyCol: String): TableCompactStats = {
-    import org.apache.spark.sql.functions.col
-    val keys = dropKeys.select(col(keyCol)).distinct().localCheckpoint()
-    rewriteBucketedTable(spark, table,
-      df => df.join(keys, Seq(keyCol), "left_anti"))
-  }
 
   /** Drop rows of generations strictly BEFORE index `name`'s current
     * rebase cut from bucketed segment `table` — space reclamation after
@@ -680,5 +637,170 @@ object FormatIO {
   def pinnedAt(spark: SparkSession, table: String, pin: Long): DataFrame = {
     import org.apache.spark.sql.functions.col
     spark.table(table).filter(col("epoch") <= pin).drop("epoch")
+  }
+
+  // ---------------------------------------------------------------
+  // INDEX TOMBSTONES AND DF LOGS: one erase lifecycle for every family.
+  // ---------------------------------------------------------------
+  // An index family erases documents by TOMBSTONE: the deleted keys
+  // land in `<name>_tombstones` (the family's key column + epoch), and
+  // every probe reads its segments through [[live]], which anti-joins
+  // them out — the documents vanish at O(deleted ids) cost with no
+  // index rewrite. [[purgeTombstones]] later removes the bytes in the
+  // same bucket-preserving rewrite a compaction performs (the
+  // right-to-erasure half). Deleted keys are retired for good:
+  // re-appending a tombstoned key is unsupported (ids are monotone and
+  // never reused — the corpus convention). The contract, for every
+  // family:
+  //
+  //   * IDEMPOTENT: a delete skips keys that are already tombstoned,
+  //     so a retried delete appends no tombstone and no compensating
+  //     segment twice (a negative df segment counted twice would
+  //     double-subtract);
+  //   * EPOCH-ATOMIC: the tombstones and the compensating segments a
+  //     family writes (negative df, BM25's stats moments) are staged
+  //     and committed at ONE epoch, so a pinned probe never sees a doc
+  //     hidden while its df mass still counts, or the reverse;
+  //   * CRASH-SCRUBBED: a delete that dies before its commit leaves
+  //     rows at the staged epoch that the next wave's
+  //     [[stageIndexEpoch]] scrubs. The delete stages BEFORE it reads
+  //     the tombstones, so a retry of a dead delete sees the scrubbed
+  //     table and tombstones its keys again.
+  //
+  // Purges run in the same single-writer maintenance window as
+  // [[compact]].
+  //
+  // A DF LOG is a document-frequency relation (key, df, epoch) kept
+  // LOG-STRUCTURED: the build writes one count segment, every append
+  // adds one, every delete adds a NEGATIVE one derived from the
+  // index's own postings (the deleted text is not needed), and the
+  // true df is the merge-on-read sum — exact integer arithmetic, and
+  // O(batch) per wave where updating one materialized relation in
+  // place would be an O(vocabulary) rewrite. A purge collapses the log
+  // back to one segment counted from the purged postings.
+
+  private def tombstonesOf(name: String): String = s"${name}_tombstones"
+
+  /** Empty index `name`'s tombstone table, keyed on `keyCol`. */
+  private def resetTombstones(spark: SparkSession, name: String,
+      keyCol: String): Unit = {
+    import org.apache.spark.sql.functions.col
+    spark.range(0).select(col("id").as(keyCol), col("id").as("epoch"))
+      .write.format("parquet").mode(SaveMode.Overwrite)
+      .saveAsTable(tombstonesOf(name))
+  }
+
+  /** End a build of index `name`: an empty tombstone table keyed on
+    * `keyCol` (probes anti-join it unconditionally) and committed
+    * epoch 0. */
+  private[graft] def initIndex(spark: SparkSession, name: String,
+      keyCol: String): Unit = {
+    resetTombstones(spark, name, keyCol)
+    initIndexEpoch(spark, name)
+  }
+
+  /** One delete wave on index `name`: `ids` (the key column alone)
+    * minus the keys already tombstoned are the wave's fresh keys;
+    * `compensate(fresh, epoch)` writes the family's compensating
+    * segments into `segments`, then the fresh keys join the
+    * tombstones, all staged and committed at one epoch. */
+  private[graft] def deleteWave(spark: SparkSession, name: String,
+      ids: DataFrame, segments: Seq[String] = Nil,
+      compensate: (DataFrame, Long) => Unit = (_, _) => ()): Unit = {
+    import org.apache.spark.sql.functions.lit
+    val e = stageIndexEpoch(spark, name, segments :+ tombstonesOf(name))
+    // checkpointed: the compensating segments and the tombstones must
+    // cover the same keys, and the append below writes the table read
+    val fresh = ids.distinct()
+      .join(spark.table(tombstonesOf(name)), ids.columns.toSeq, "left_anti")
+      .localCheckpoint()
+    compensate(fresh, e)
+    fresh.withColumn("epoch", lit(e))
+      .write.format("parquet").mode(SaveMode.Append)
+      .saveAsTable(tombstonesOf(name))
+    spark.catalog.refreshTable(tombstonesOf(name)) // see appendBucketed
+    commitIndexEpoch(spark, name, e)
+  }
+
+  /** Physically erase index `name`'s tombstoned keys from each bucketed
+    * table of `tables` (a bucket-preserving rewrite that doubles as a
+    * compaction), run `rebuild` at the committed epoch (a family's
+    * collapse of its df log or stats segments from the purged tables),
+    * then empty the tombstones. Returns each table's file stats. */
+  private[graft] def purgeTombstones(spark: SparkSession, name: String,
+      tables: Seq[String], rebuild: Long => Unit = _ => ())
+      : Seq[TableCompactStats] = {
+    val keys = spark.table(tombstonesOf(name)).drop("epoch").distinct()
+      .localCheckpoint()
+    val stats = tables.map(t => rewriteBucketedTable(spark, t,
+      _.join(keys, keys.columns.toSeq, "left_anti")))
+    rebuild(committedEpoch(spark, name))
+    resetTombstones(spark, name, keys.columns.head)
+    stats
+  }
+
+  /** `segment` — a segment of index `name` already pinned at `pin` —
+    * without the rows of keys tombstoned at or before `pin`. */
+  private[graft] def live(spark: SparkSession, name: String, pin: Long,
+      segment: DataFrame): DataFrame = {
+    val tomb = pinnedAt(spark, tombstonesOf(name), pin)
+    segment.join(tomb, tomb.columns.toSeq, "left_anti")
+  }
+
+  /** Segment table `table` of index `name` pinned at `pin`, live rows
+    * only ([[live]] of [[pinnedAt]]). */
+  private[graft] def liveAt(spark: SparkSession, name: String,
+      table: String, pin: Long): DataFrame =
+    live(spark, name, pin, pinnedAt(spark, table, pin))
+
+  /** Per-`key` counts of `rows` (one row per document and key): the
+    * body of one df-log segment. */
+  private[graft] def dfCounts(rows: DataFrame, key: String): DataFrame = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    rows.groupBy(col(key)).agg(count(lit(1)).as("df"))
+  }
+
+  /** Write `rows` to the unbucketed log table `table` (a df log, BM25's
+    * stats moments) as one segment tagged `epoch`: appended, or with
+    * `replace` (a build, a purge) as the whole log. */
+  private[graft] def writeSegment(spark: SparkSession, table: String,
+      rows: DataFrame, epoch: Long, replace: Boolean = false): Unit = {
+    import org.apache.spark.sql.functions.lit
+    rows.withColumn("epoch", lit(epoch))
+      .write.format("parquet")
+      .mode(if (replace) SaveMode.Overwrite else SaveMode.Append)
+      .saveAsTable(table)
+    spark.catalog.refreshTable(table) // see appendBucketed
+  }
+
+  /** The [[deleteWave]] compensation of df log `table`: a negative
+    * segment, minus the per-`key` count of the `postings` rows of the
+    * fresh keys. */
+  private[graft] def subtractDf(spark: SparkSession, table: String,
+      postings: String, key: String)(fresh: DataFrame, epoch: Long): Unit = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    writeSegment(spark, table,
+      spark.table(postings).join(fresh, fresh.columns.toSeq, "left_semi")
+        .groupBy(col(key)).agg((-count(lit(1))).as("df")),
+      epoch)
+  }
+
+  /** Replace df log `table` with one segment counted from `postings`,
+    * tagged `epoch`. It reads a different table than it overwrites, so
+    * nothing needs materializing first. */
+  private[graft] def rebuildDfLog(spark: SparkSession, table: String,
+      postings: String, key: String, epoch: Long): Unit =
+    writeSegment(spark, table, dfCounts(spark.table(postings), key), epoch,
+      replace = true)
+
+  /** The merged df of df log `table` at `pin` for the keys in `vocab`
+    * (one column, named like the log's key). The semi-join sits BELOW
+    * the merge sum, so a read costs O(vocab), never O(log vocabulary). */
+  private[graft] def readDfLog(spark: SparkSession, table: String,
+      pin: Long, vocab: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, sum}
+    val key = vocab.columns.head
+    pinnedAt(spark, table, pin).join(vocab, Seq(key), "left_semi")
+      .groupBy(col(key)).agg(sum(col("df")).as("df"))
   }
 }

@@ -465,11 +465,10 @@ object Streams {
   def minhashIndexStream(spark: SparkSession, docs: Dataset[Doc],
       maxBucket: Int = 64): Dataset[CandidatePair] = {
     import spark.implicits._
-    import graft.functions.HashExpressions.{minhashSignature, rollingShingles}
+    import graft.functions.HashExpressions.{minhashSignature, normText,
+      rollingShingles}
     val banded = docs.toDF()
-      .select(col("doc_id"),
-        rollingShingles(
-          regexp_replace(lower(trim(col("text"))), "\\s+", " "), 8).as("shingles"))
+      .select(col("doc_id"), rollingShingles(normText, 8).as("shingles"))
       .filter(size(col("shingles")) > 0)
       .withColumn("sig", minhashSignature(col("shingles"), 32))
       .withColumn("band", explode(expr(

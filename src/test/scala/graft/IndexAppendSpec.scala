@@ -42,6 +42,17 @@ class IndexAppendSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  /** A retried delete changes nothing: `index` holds exactly one
+    * tombstone per deleted id, and `retried` (probe rows after the
+    * retry) equals `once` (the same probe after the single delete). */
+  private def assertRetryNoOp(index: String, ids: DataFrame,
+      once: Seq[String], retried: Seq[String]): Unit = {
+    assert(rows(spark.table(s"${index}_tombstones").drop("epoch")) ==
+      rows(ids.distinct()),
+      s"$index: a retried delete must leave one tombstone per deleted id")
+    assert(retried == once, s"$index: a retried delete must not change probes")
+  }
+
   test("minhash append: append∘build == build(union), probe-equal; " +
     "compaction folds the appended files without changing probes") {
     val (corpusDir, batch) = splitDir("documents", "doc_id")
@@ -260,6 +271,10 @@ class IndexAppendSpec extends AnyFunSuite {
       Seq(-999L).toDF("doc_id"))
     val afterDel = rows(Multimodal.probePhashIndex(spark, "ph_full", probes))
     assert(afterDel == before, "tombstoned doc must vanish from pairs")
+    Multimodal.deleteFromPhashIndex(spark, "ph_full",
+      Seq(-999L).toDF("doc_id")) // retry
+    assertRetryNoOp("ph_full", Seq(-999L).toDF("doc_id"), afterDel,
+      rows(Multimodal.probePhashIndex(spark, "ph_full", probes)))
     // physical purge preserves probe results and the bucketed layout
     Multimodal.purgePhashTombstones(spark, "ph_full")
     assert(rows(Multimodal.probePhashIndex(spark, "ph_full", probes))
@@ -283,6 +298,10 @@ class IndexAppendSpec extends AnyFunSuite {
     Dedup.buildMinhashIndex(spark, sf, "mh_del_full", nBuckets = 4)
     val preDelete = rows(Dedup.probeMinhashIndex(spark, "mh_del_full", probes))
     Dedup.deleteFromMinhashIndex(spark, "mh_del_full", delIds)
+    val mhOnce = rows(Dedup.probeMinhashIndex(spark, "mh_del_full", probes))
+    Dedup.deleteFromMinhashIndex(spark, "mh_del_full", delIds) // retry
+    assertRetryNoOp("mh_del_full", delIds, mhOnce,
+      rows(Dedup.probeMinhashIndex(spark, "mh_del_full", probes)))
     Dedup.buildMinhashIndex(spark, corpusDir, "mh_del_ref", nBuckets = 4)
     val del = rows(Dedup.probeMinhashIndex(spark, "mh_del_full", probes))
     assert(del == rows(Dedup.probeMinhashIndex(spark, "mh_del_ref", probes)),
@@ -305,7 +324,10 @@ class IndexAppendSpec extends AnyFunSuite {
     // the index's own postings (no source text needed); retry is a no-op
     TextAnalysis.buildWinnowIndex(spark, sf, "wn_del_full", nBuckets = 4)
     TextAnalysis.deleteFromWinnowIndex(spark, "wn_del_full", delIds)
+    val wnOnce = rows(TextAnalysis.probeWinnowIndex(spark, "wn_del_full", probes))
     TextAnalysis.deleteFromWinnowIndex(spark, "wn_del_full", delIds) // retry
+    assertRetryNoOp("wn_del_full", delIds, wnOnce,
+      rows(TextAnalysis.probeWinnowIndex(spark, "wn_del_full", probes)))
     TextAnalysis.buildWinnowIndex(spark, corpusDir, "wn_del_ref", nBuckets = 4)
     val wDel = rows(TextAnalysis.probeWinnowIndex(spark, "wn_del_full", probes))
     assert(wDel ==
@@ -339,6 +361,11 @@ class IndexAppendSpec extends AnyFunSuite {
     // ---- containment
     Dedup.buildContainmentIndex(spark, sf, "cont_del_full", nBuckets = 4)
     Dedup.deleteFromContainmentIndex(spark, "cont_del_full", delIds)
+    val contOnce = rows(Dedup.probeContainmentBoth(spark, "cont_del_full",
+      probes))
+    Dedup.deleteFromContainmentIndex(spark, "cont_del_full", delIds) // retry
+    assertRetryNoOp("cont_del_full", delIds, contOnce,
+      rows(Dedup.probeContainmentBoth(spark, "cont_del_full", probes)))
     Dedup.buildContainmentIndex(spark, corpusDir, "cont_del_ref", nBuckets = 4)
     assert(rows(Dedup.probeContainmentIndex(spark, "cont_del_full", probes))
       == rows(Dedup.probeContainmentIndex(spark, "cont_del_ref", probes)),
@@ -363,7 +390,10 @@ class IndexAppendSpec extends AnyFunSuite {
     // negative moment segment (whole-number doubles: exact arithmetic)
     Search.buildSearchIndex(spark, sf, "srch_del_full", nBuckets = 4)
     Search.deleteFromSearchIndex(spark, "srch_del_full", delIds)
+    val srchOnce = rows(Search.probeSearchIndex(spark, "srch_del_full"))
     Search.deleteFromSearchIndex(spark, "srch_del_full", delIds) // retry
+    assertRetryNoOp("srch_del_full", delIds, srchOnce,
+      rows(Search.probeSearchIndex(spark, "srch_del_full")))
     Search.buildSearchIndex(spark, corpusDir, "srch_del_ref", nBuckets = 4)
     assert(rows(Search.probeSearchIndex(spark, "srch_del_full"))
       == rows(Search.probeSearchIndex(spark, "srch_del_ref")),
@@ -382,12 +412,17 @@ class IndexAppendSpec extends AnyFunSuite {
     // ---- edit
     val (custDir, custBatch) = splitDir("customer", "c_custkey")
     Dedup.buildEditIndex(spark, sf, "edit_del_full", nBuckets = 4)
-    Dedup.deleteFromEditIndex(spark, "edit_del_full",
-      custBatch.select(col("c_custkey").as("index_key")))
-    Dedup.buildEditIndex(spark, custDir, "edit_del_ref", nBuckets = 4)
     val eProbes = Tables.customer(spark, sf)
       .select(col("c_custkey").as("probe_key"), col("c_name").as("probe_name"))
       .localCheckpoint()
+    val delKeys = custBatch.select(col("c_custkey").as("index_key"))
+      .localCheckpoint()
+    Dedup.deleteFromEditIndex(spark, "edit_del_full", delKeys)
+    val editOnce = rows(Dedup.probeEditIndex(spark, "edit_del_full", eProbes))
+    Dedup.deleteFromEditIndex(spark, "edit_del_full", delKeys) // retry
+    assertRetryNoOp("edit_del_full", delKeys, editOnce,
+      rows(Dedup.probeEditIndex(spark, "edit_del_full", eProbes)))
+    Dedup.buildEditIndex(spark, custDir, "edit_del_ref", nBuckets = 4)
     val eRef = rows(Dedup.probeEditIndex(spark, "edit_del_ref", eProbes))
     assert(rows(Dedup.probeEditIndex(spark, "edit_del_full", eProbes))
       == eRef, "edit probe after delete must equal the reduced rebuild")
@@ -399,13 +434,18 @@ class IndexAppendSpec extends AnyFunSuite {
     // retrains — retraining is by definition a rebuild)
     val (embDir, embBatch) = splitDir("embeddings", "vec_id")
     Similarity.buildIvfIndex(spark, sf, "ivf_del_full", nBuckets = 4)
-    Similarity.deleteFromIvfIndex(spark, "ivf_del_full",
-      embBatch.select(col("vec_id")))
-    Similarity.buildIvfIndex(spark, embDir, "ivf_del_ref", nBuckets = 4,
-      centroidSource = Some("ivf_del_full"))
     val queries = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .limit(50).localCheckpoint()
+    val delVecs = embBatch.select(col("vec_id")).localCheckpoint()
+    Similarity.deleteFromIvfIndex(spark, "ivf_del_full", delVecs)
+    val ivfOnce = rows(Similarity.probeIvfIndexOn(spark, "ivf_del_full",
+      queries))
+    Similarity.deleteFromIvfIndex(spark, "ivf_del_full", delVecs) // retry
+    assertRetryNoOp("ivf_del_full", delVecs, ivfOnce,
+      rows(Similarity.probeIvfIndexOn(spark, "ivf_del_full", queries)))
+    Similarity.buildIvfIndex(spark, embDir, "ivf_del_ref", nBuckets = 4,
+      centroidSource = Some("ivf_del_full"))
     val vRef = rows(Similarity.probeIvfIndexOn(spark, "ivf_del_ref", queries))
     assert(rows(Similarity.probeIvfIndexOn(spark, "ivf_del_full", queries))
       == vRef, "IVF probe after delete must equal the pinned rebuild")
@@ -490,6 +530,8 @@ class IndexAppendSpec extends AnyFunSuite {
     TextAnalysis.deleteFromLmIndex(spark, "lm_app_full", delIds) // retry
     assert(rows(TextAnalysis.probeLmIndex(spark, "lm_app_full", probes)) == del,
       "retried delete must be a no-op (no double subtraction)")
+    assertRetryNoOp("lm_app_full", delIds, del,
+      rows(TextAnalysis.probeLmIndex(spark, "lm_app_full", probes)))
     TextAnalysis.purgeLmTombstones(spark, "lm_app_full")
     assert(rows(TextAnalysis.probeLmIndex(spark, "lm_app_full", probes)) == del,
       "purge must not change probe results")
@@ -616,6 +658,10 @@ class IndexAppendSpec extends AnyFunSuite {
       Seq(-999L).toDF("doc_id"))
     assert(rows(Search.phraseProbe(spark, "pos_full", phrase)) == probe,
       "tombstoned doc must vanish from matches")
+    Search.deleteFromPositionalIndex(spark, "pos_full",
+      Seq(-999L).toDF("doc_id")) // retry
+    assertRetryNoOp("pos_full", Seq(-999L).toDF("doc_id"), probe,
+      rows(Search.phraseProbe(spark, "pos_full", phrase)))
     // physical purge preserves probe results and erases the rows
     Search.purgePositionalTombstones(spark, "pos_full")
     assert(rows(Search.phraseProbe(spark, "pos_full", phrase)) == probe)

@@ -157,6 +157,18 @@ class IvfPqSpec extends AnyFunSuite {
     // tombstone one axis copy: retrain must not resurrect it
     Similarity.deleteFromIvfPqIndex(spark, "ivfpq_ret",
       Seq(39L).toDF("vec_id"))
+    // a retried delete changes nothing: one tombstone for the id, and
+    // probes equal to the single delete's
+    def probeAll() = Similarity.probeIvfPqIndex(spark, "ivfpq_ret",
+      base.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "v"),
+      k = 3, nProbe = 2).collect().map(_.toString).sorted.toSeq
+    val once = probeAll()
+    Similarity.deleteFromIvfPqIndex(spark, "ivfpq_ret",
+      Seq(39L).toDF("vec_id")) // retry
+    assert(spark.table("ivfpq_ret_tombstones").select("id_b").collect()
+      .map(_.getLong(0)).toSeq == Seq(39L),
+      "a retried delete must leave one tombstone per deleted id")
+    assert(probeAll() == once, "a retried delete must not change probes")
 
     // two-phase retrain: a probe pinned BETWEEN stage and commit reads
     // the old codebooks with the old postings, consistently
