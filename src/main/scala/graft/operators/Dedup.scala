@@ -820,8 +820,8 @@ object Dedup {
     graft.sources.FormatIO.writeBucketed(sets.withColumnRenamed("doc_id", "doc_b")
       .withColumnRenamed("st", "sb").withColumn("epoch", lit(0L)),
       s"${name}_sets", "doc_b", nBuckets)
-    val dfreq = graft.sources.FormatIO.dfCounts(
-      sets.select(explode(col("st")).as("tok")), "tok")
+    val dfreq = sets.select(explode(col("st")).as("tok"))
+      .groupBy(col("tok")).agg(count(lit(1)).as("df"))
     graft.sources.FormatIO.writeSegment(spark, s"${name}_df", dfreq, 0L,
       replace = true)
     // INDEX-SIDE prefixes enable the REVERSE probe direction
@@ -855,9 +855,8 @@ object Dedup {
   def deleteFromContainmentIndex(spark: SparkSession, name: String,
       docIds: DataFrame): Unit =
     graft.sources.FormatIO.deleteWave(spark, name,
-      docIds.select(col("doc_id").as("doc_b")), Seq(s"${name}_df"),
-      graft.sources.FormatIO.subtractDf(spark, s"${name}_df",
-        s"${name}_postings", "tok"))
+      docIds.select(col("doc_id").as("doc_b")), Seq(s"${name}_df" ->
+        graft.sources.FormatIO.subtractDf(spark, s"${name}_postings", "tok")))
 
   /** Physically erase tombstoned documents from the postings, sets and
     * prefixes, and collapse the df log into one segment counted from
@@ -949,8 +948,8 @@ object Dedup {
         .withColumn("epoch", lit(e)),
       s"${name}_sets")
     graft.sources.FormatIO.writeSegment(spark, s"${name}_df",
-      graft.sources.FormatIO.dfCounts(
-        sets.select(explode(col("st")).as("tok")), "tok"), e)
+      sets.select(explode(col("st")).as("tok"))
+        .groupBy(col("tok")).agg(count(lit(1)).as("df")), e)
     // batch prefixes order by the merged df AS OF this append, its own
     // staged segment included (read at e) — any order is
     // recall-lossless (subset-choice freedom, see build)

@@ -167,14 +167,6 @@ object Search {
     graft.sources.FormatIO.initIndex(spark, name, "doc_id")
   }
 
-  /** The index's live postings ([[graft.sources.FormatIO.liveAt]]) —
-    * both probes read through this, which keeps df (derived by
-    * COUNTING matched postings) automatically consistent with
-    * deletions. */
-  private def livePostings(spark: SparkSession, name: String,
-      pin: Long): DataFrame =
-    graft.sources.FormatIO.liveAt(spark, name, s"${name}_postings", pin)
-
   /** TOMBSTONE-DELETE documents from the persisted BM25 index — a
     * [[graft.sources.FormatIO.deleteWave]]: because BM25 df is counted
     * from live postings, idf is exact at once, and the wave's NEGATIVE
@@ -183,11 +175,10 @@ object Search {
   def deleteFromSearchIndex(spark: SparkSession, name: String,
       docIds: DataFrame): Unit =
     graft.sources.FormatIO.deleteWave(spark, name, docIds.select(col("doc_id")),
-      Seq(s"${name}_stats"), (fresh, e) =>
-        graft.sources.FormatIO.writeSegment(spark, s"${name}_stats",
-          spark.table(s"${name}_lens").join(fresh, Seq("doc_id"), "left_semi")
-            .agg((-count(lit(1))).as("n_docs"),
-              (-coalesce(sum(col("dl")), lit(0.0))).as("sum_dl")), e))
+      Seq(s"${name}_stats" -> (fresh =>
+        spark.table(s"${name}_lens").join(fresh, Seq("doc_id"), "left_semi")
+          .agg((-count(lit(1))).as("n_docs"),
+            (-coalesce(sum(col("dl")), lit(0.0))).as("sum_dl")))))
 
   /** Physically erase tombstoned documents' postings and lens rows and
     * rebuild the stats relation from the purged lens (one exact
@@ -207,9 +198,9 @@ object Search {
     * log-structured `_stats` segments. A fully-tombstoned index sums
     * to zero live docs; the guard keeps avgdl NULL instead of the
     * 0/0 NaN that would otherwise ride into any probe arithmetic
-    * (probes of such an index already return empty — livePostings
-    * anti-joins the tombstones — but the stats row itself must stay
-    * NaN-free for callers that read it directly). */
+    * (probes of such an index already return empty — they read the
+    * live postings — but the stats row itself must stay NaN-free for
+    * callers that read it directly). */
   private def mergedStats(spark: SparkSession, name: String,
       pin: Long): DataFrame =
     graft.sources.FormatIO.pinnedAt(spark, s"${name}_stats", pin)
@@ -263,7 +254,9 @@ object Search {
       terms: Seq[String] = Seq("data", "model", "spark"),
       topN: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val pin = graft.sources.FormatIO.committedEpoch(spark, name)
-    val tf = livePostings(spark, name, pin)
+    // both probes read the LIVE postings, which keeps df (derived by
+    // COUNTING matched postings) automatically consistent with deletions
+    val tf = graft.sources.FormatIO.liveAt(spark, name, s"${name}_postings", pin)
       .filter(col("tok").isInCollection(terms))
     val df = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val stats = mergedStats(spark, name, pin)
@@ -299,7 +292,7 @@ object Search {
     val pin = graft.sources.FormatIO.committedEpoch(spark, name)
     val qterms = queries.select(col("query_id"), col("tok")).distinct()
     val toks = qterms.select(col("tok")).distinct()
-    val matched = livePostings(spark, name, pin)
+    val matched = graft.sources.FormatIO.liveAt(spark, name, s"${name}_postings", pin)
       .join(broadcast(toks), Seq("tok"))
     // postings are unique per (tok, doc) — count IS the doc frequency
     val df = matched.groupBy(col("tok")).agg(count(lit(1)).as("df"))

@@ -993,7 +993,7 @@ object TextAnalysis {
         .withColumn("epoch", lit(0L)), s"${name}_fps",
       "fp", nBuckets, sortCol = Some("fp"))
     graft.sources.FormatIO.writeSegment(spark, s"${name}_fpdf",
-      graft.sources.FormatIO.dfCounts(fps, "fp"), 0L, replace = true)
+      fps.groupBy(col("fp")).agg(count(lit(1)).as("df")), 0L, replace = true)
     import spark.implicits._
     Seq((k, w, maxFpDf)).toDF("k", "w", "max_fp_df")
       .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -1011,9 +1011,8 @@ object TextAnalysis {
   def deleteFromWinnowIndex(spark: SparkSession, name: String,
       docIds: DataFrame): Unit =
     graft.sources.FormatIO.deleteWave(spark, name,
-      docIds.select(col("doc_id").as("idx_doc")), Seq(s"${name}_fpdf"),
-      graft.sources.FormatIO.subtractDf(spark, s"${name}_fpdf",
-        s"${name}_fps", "fp"))
+      docIds.select(col("doc_id").as("idx_doc")), Seq(s"${name}_fpdf" ->
+        graft.sources.FormatIO.subtractDf(spark, s"${name}_fps", "fp")))
 
   /** Physically erase tombstoned documents from the fp postings and
     * collapse the fp-df log into one segment counted from the purged
@@ -1086,7 +1085,7 @@ object TextAnalysis {
       fps.withColumnRenamed("doc_id", "idx_doc")
         .withColumn("epoch", lit(e)), s"${name}_fps")
     graft.sources.FormatIO.writeSegment(spark, s"${name}_fpdf",
-      graft.sources.FormatIO.dfCounts(fps, "fp"), e)
+      fps.groupBy(col("fp")).agg(count(lit(1)).as("df")), e)
     graft.sources.FormatIO.commitIndexEpoch(spark, name, e)
   }
 
@@ -1317,7 +1316,7 @@ object TextAnalysis {
     graft.sources.FormatIO.appendBucketed(spark,
       posts.withColumn("epoch", lit(e)), s"${name}_postings")
     graft.sources.FormatIO.writeSegment(spark, s"${name}_gramdf",
-      graft.sources.FormatIO.dfCounts(posts, "gram"), e)
+      posts.groupBy(col("gram")).agg(count(lit(1)).as("df")), e)
     graft.sources.FormatIO.commitIndexEpoch(spark, name, e)
   }
 
@@ -1330,9 +1329,8 @@ object TextAnalysis {
   def deleteFromLmIndex(spark: SparkSession, name: String,
       docIds: DataFrame): Unit =
     graft.sources.FormatIO.deleteWave(spark, name,
-      docIds.select(col("doc_id").as("idx_doc")), Seq(s"${name}_gramdf"),
-      graft.sources.FormatIO.subtractDf(spark, s"${name}_gramdf",
-        s"${name}_postings", "gram"))
+      docIds.select(col("doc_id").as("idx_doc")), Seq(s"${name}_gramdf" ->
+        graft.sources.FormatIO.subtractDf(spark, s"${name}_postings", "gram")))
 
   /** Physically erase tombstoned documents' postings and collapse the
     * gram-df log into one segment counted from the purged postings.

@@ -700,21 +700,22 @@ object FormatIO {
   }
 
   /** One delete wave on index `name`: `ids` (the key column alone)
-    * minus the keys already tombstoned are the wave's fresh keys;
-    * `compensate(fresh, epoch)` writes the family's compensating
-    * segments into `segments`, then the fresh keys join the
-    * tombstones, all staged and committed at one epoch. */
+    * minus the keys already tombstoned are the wave's fresh keys. Each
+    * `(table, rows)` of `compensate` appends `rows(fresh)` to log table
+    * `table` as one segment, then the fresh keys join the tombstones;
+    * every table named here is staged and committed at one epoch. */
   private[graft] def deleteWave(spark: SparkSession, name: String,
-      ids: DataFrame, segments: Seq[String] = Nil,
-      compensate: (DataFrame, Long) => Unit = (_, _) => ()): Unit = {
+      ids: DataFrame,
+      compensate: Seq[(String, DataFrame => DataFrame)] = Nil): Unit = {
     import org.apache.spark.sql.functions.lit
-    val e = stageIndexEpoch(spark, name, segments :+ tombstonesOf(name))
+    val e = stageIndexEpoch(spark, name,
+      compensate.map(_._1) :+ tombstonesOf(name))
     // checkpointed: the compensating segments and the tombstones must
     // cover the same keys, and the append below writes the table read
     val fresh = ids.distinct()
       .join(spark.table(tombstonesOf(name)), ids.columns.toSeq, "left_anti")
       .localCheckpoint()
-    compensate(fresh, e)
+    compensate.foreach { case (t, rows) => writeSegment(spark, t, rows(fresh), e) }
     fresh.withColumn("epoch", lit(e))
       .write.format("parquet").mode(SaveMode.Append)
       .saveAsTable(tombstonesOf(name))
@@ -753,13 +754,6 @@ object FormatIO {
       table: String, pin: Long): DataFrame =
     live(spark, name, pin, pinnedAt(spark, table, pin))
 
-  /** Per-`key` counts of `rows` (one row per document and key): the
-    * body of one df-log segment. */
-  private[graft] def dfCounts(rows: DataFrame, key: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, count, lit}
-    rows.groupBy(col(key)).agg(count(lit(1)).as("df"))
-  }
-
   /** Write `rows` to the unbucketed log table `table` (a df log, BM25's
     * stats moments) as one segment tagged `epoch`: appended, or with
     * `replace` (a build, a purge) as the whole log. */
@@ -773,25 +767,26 @@ object FormatIO {
     spark.catalog.refreshTable(table) // see appendBucketed
   }
 
-  /** The [[deleteWave]] compensation of df log `table`: a negative
-    * segment, minus the per-`key` count of the `postings` rows of the
-    * fresh keys. */
-  private[graft] def subtractDf(spark: SparkSession, table: String,
-      postings: String, key: String)(fresh: DataFrame, epoch: Long): Unit = {
+  /** A df log's [[deleteWave]] compensation: the negative segment,
+    * minus the per-`key` count of the `postings` rows of the fresh
+    * keys. */
+  private[graft] def subtractDf(spark: SparkSession, postings: String,
+      key: String)(fresh: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, count, lit}
-    writeSegment(spark, table,
-      spark.table(postings).join(fresh, fresh.columns.toSeq, "left_semi")
-        .groupBy(col(key)).agg((-count(lit(1))).as("df")),
-      epoch)
+    spark.table(postings).join(fresh, fresh.columns.toSeq, "left_semi")
+      .groupBy(col(key)).agg((-count(lit(1))).as("df"))
   }
 
   /** Replace df log `table` with one segment counted from `postings`,
     * tagged `epoch`. It reads a different table than it overwrites, so
     * nothing needs materializing first. */
   private[graft] def rebuildDfLog(spark: SparkSession, table: String,
-      postings: String, key: String, epoch: Long): Unit =
-    writeSegment(spark, table, dfCounts(spark.table(postings), key), epoch,
-      replace = true)
+      postings: String, key: String, epoch: Long): Unit = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    writeSegment(spark, table,
+      spark.table(postings).groupBy(col(key)).agg(count(lit(1)).as("df")),
+      epoch, replace = true)
+  }
 
   /** The merged df of df log `table` at `pin` for the keys in `vocab`
     * (one column, named like the log's key). The semi-join sits BELOW
